@@ -23,8 +23,8 @@ offset, so the cursor is re-seeded to the true position first. Every
 cursor into re-emitting consumed files).
 
 Bounded catch-up ("availableNow" equivalent): pair
-``maxFilesPerTrigger`` with ``query.processAllAvailable()`` — the stream
-drains to the tip in limited batches and the call returns when
+``maxFilesPerTrigger`` with ``streaming.pipelines.drain_all`` — the
+stream drains to the tip in limited batches and the drain returns when
 ``latestOffset`` stops advancing; pass ``endingVersion`` to pin the
 drain target against concurrent writers.
 

@@ -11,42 +11,42 @@ changes wall-clock, not commit-log contents or ordering.
 
 ``run_jobs`` keeps FIFO scheduling (the first job's tasks get resources
 first, later jobs back-fill the tail) and propagates the caller thread's
-job group / description into the pool threads via
-``inheritable_thread_target`` so concurrent jobs stay correctly labelled.
+job group / description and session tags into the pool threads via
+``inheritable_thread_target`` so concurrent jobs stay correctly labelled,
+also when a pool thread calls ``run_jobs`` again.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from typing import Callable, Sequence
+from typing import Callable
+
+from pyspark import inheritable_thread_target
+from pyspark.errors import PySparkRuntimeError
+from pyspark.sql import SparkSession
 
 
-def run_jobs(*thunks: Callable, max_workers: int | None = None) -> list:
+def run_jobs(*thunks: Callable) -> list:
     """Run independent Spark-action thunks concurrently; results in order.
 
-    Falls through to a plain call for a single thunk (no pool, no extra
-    threads). Exceptions propagate: the first failing thunk's exception
-    is raised after all submitted thunks finish (staging side effects
-    land in per-thunk unique dirs, so a failed sibling leaves no shared
-    debris — the caller's commit never runs).
+    No thunks give ``[]``; a single thunk is a plain call (no pool, no
+    extra threads). Exceptions propagate: the first failing thunk's
+    exception is raised after all submitted thunks finish (staging side
+    effects land in per-thunk unique dirs, so a failed sibling leaves no
+    shared debris — the caller's commit never runs).
     """
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
     try:
-        from pyspark import inheritable_thread_target
-        from pyspark.sql import SparkSession
-
-        session = SparkSession.getActiveSession()
-        wrap = (
-            inheritable_thread_target(session)
-            if session is not None  # Spark 4 form: also inherits tags
-            else inheritable_thread_target
-        )
-        wrapped: Sequence[Callable] = [wrap(t) for t in thunks]
-    except Exception:  # no active context (unit tests without Spark)
+        # active(), not getActiveSession(): inside a pool thread only the
+        # default session is set, and a nested run_jobs must still pass
+        # the outer caller's tags on to its own threads.
+        session = SparkSession.active()
+    except PySparkRuntimeError:  # no session at all: nothing to propagate
         wrapped = thunks
-    with ThreadPoolExecutor(
-        max_workers=max_workers or min(len(thunks), 4)
-    ) as pool:
+    else:
+        wrap = inheritable_thread_target(session)
+        wrapped = tuple(wrap(t) for t in thunks)
+    with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as pool:
         futures = [pool.submit(t) for t in wrapped]
         return [f.result() for f in futures]

@@ -960,8 +960,15 @@ class IcebergTableReader:
             raise FileNotFoundError(f"no metadata/ under {path}")
 
     def _metadata(self) -> dict:
+        return self._versioned_metadata()[1]
+
+    def _versioned_metadata(self) -> tuple[int, dict]:
+        """(version, metadata) of the table's tip. ``version-hint.text``
+        is only a hint: a writer publishes ``vN.metadata.json`` before it
+        rewrites the hint, and two writers may rewrite it out of order, so
+        probe forward from it (published files are always complete — see
+        ``_publish_metadata``)."""
         hint = os.path.join(self._meta_dir, "version-hint.text")
-        version = None
         if os.path.exists(hint):
             with open(hint) as f:
                 version = int(f.read().strip())
@@ -977,10 +984,14 @@ class IcebergTableReader:
             if not vs:
                 raise FileNotFoundError(f"no vN.metadata.json in {self._meta_dir}")
             version = max(vs)
+        while os.path.exists(
+            os.path.join(self._meta_dir, f"v{version + 1}.metadata.json")
+        ):
+            version += 1
         with open(
             os.path.join(self._meta_dir, f"v{version}.metadata.json")
         ) as f:
-            return json.load(f)
+            return version, json.load(f)
 
     def _abs(self, p: str) -> str:
         if p.startswith("file:"):
@@ -3123,16 +3134,26 @@ class IcebergTableWriter:
             snapshots[-1]["first-row-id"] = next_row
             snapshots[-1]["added-rows"] = consumed
             meta["next-row-id"] = next_row + consumed
-        target = os.path.join(self._meta_dir, f"v{version}.metadata.json")
-        # O_EXCL: the Hadoop-catalog commit primitive (losing a version
-        # race must fail, not clobber)
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        self._publish_metadata(version, meta)
+
+    def _publish_metadata(self, version: int, meta: dict) -> None:
+        """Publish ``v{version}.metadata.json`` complete or not at all, then
+        point the hint at it. ``os.link`` of a fully written temp file is
+        the put-if-absent commit primitive of the Hadoop catalog: losing
+        the version race raises ``FileExistsError`` and never clobbers, and
+        no reader can see a half-written file. The hint is replaced, never
+        truncated in place, so a concurrent reader cannot parse ""."""
+        tmp = os.path.join(self._meta_dir, f".{uuid.uuid4().hex}.tmp")
+        with open(tmp, "w") as f:
+            f.write(json.dumps(meta, indent=1))
         try:
-            os.write(fd, json.dumps(meta, indent=1).encode())
+            os.link(tmp, os.path.join(self._meta_dir, f"v{version}.metadata.json"))
         finally:
-            os.close(fd)
-        with open(os.path.join(self._meta_dir, "version-hint.text"), "w") as f:
+            os.unlink(tmp)
+        hint_tmp = os.path.join(self._meta_dir, f".{uuid.uuid4().hex}.tmp")
+        with open(hint_tmp, "w") as f:
             f.write(str(version))
+        os.replace(hint_tmp, os.path.join(self._meta_dir, "version-hint.text"))
 
     def _commit_metadata_strict(self, *args, **kwargs) -> None:
         """Commit for READ-dependent operations whose read set is the
@@ -3263,10 +3284,8 @@ class IcebergTableWriter:
             r = IcebergTableReader(self.path)
         except FileNotFoundError:
             return None
-        meta = r._metadata()
-        hint = os.path.join(self._meta_dir, "version-hint.text")
-        with open(hint) as f:
-            meta["__version"] = int(f.read().strip())
+        version, meta = r._versioned_metadata()
+        meta["__version"] = version
         return meta
 
     @staticmethod
@@ -3343,18 +3362,7 @@ class IcebergTableWriter:
         if properties is not None:
             meta["properties"] = properties
         version = prev["__version"] + 1
-        target = os.path.join(
-            self._meta_dir, f"v{version}.metadata.json"
-        )
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            os.write(fd, json.dumps(meta, indent=1).encode())
-        finally:
-            os.close(fd)
-        with open(
-            os.path.join(self._meta_dir, "version-hint.text"), "w"
-        ) as f:
-            f.write(str(version))
+        self._publish_metadata(version, meta)
 
     def rename_column(self, old: str, new: str) -> None:
         """``ALTER TABLE … RENAME COLUMN`` — a new schema-id where the
@@ -3658,18 +3666,7 @@ class IcebergTableWriter:
         meta["sort-orders"] = orders
         meta["default-sort-order-id"] = oid
         version = prev["__version"] + 1
-        target = os.path.join(
-            self._meta_dir, f"v{version}.metadata.json"
-        )
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            os.write(fd, json.dumps(meta, indent=1).encode())
-        finally:
-            os.close(fd)
-        with open(
-            os.path.join(self._meta_dir, "version-hint.text"), "w"
-        ) as f:
-            f.write(str(version))
+        self._publish_metadata(version, meta)
 
     def _default_sort_ctx(
         self, prev: dict, schema_json: dict
@@ -3722,18 +3719,7 @@ class IcebergTableWriter:
             ]
         )
         version = prev["__version"] + 1
-        target = os.path.join(
-            self._meta_dir, f"v{version}.metadata.json"
-        )
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            os.write(fd, json.dumps(meta, indent=1).encode())
-        finally:
-            os.close(fd)
-        with open(
-            os.path.join(self._meta_dir, "version-hint.text"), "w"
-        ) as f:
-            f.write(str(version))
+        self._publish_metadata(version, meta)
 
     def drop_column(self, column: str) -> None:
         """``ALTER TABLE … DROP COLUMN`` — a new schema-id without the
@@ -4117,7 +4103,7 @@ class IcebergTableWriter:
         attempt re-loads the tip metadata, re-validates the batch schema
         against it (a concurrent writer may have evolved it), re-issues
         snapshot/sequence ids past the new tip, rebuilds the (tiny)
-        manifest + manifest list, and retries the O_EXCL metadata swap —
+        manifest + manifest list, and retries the put-if-absent metadata swap —
         two concurrent appenders both land, in some serial order.
 
         ``branch``: commit to a NAMED BRANCH instead of main (Iceberg's
@@ -5468,22 +5454,13 @@ class IcebergTableWriter:
         READ ``prev`` and rewrite it, so a lost version race means the
         rewrite is stale — surface it, never clobber."""
         version = prev["__version"] + 1
-        target = os.path.join(self._meta_dir, f"v{version}.metadata.json")
         try:
-            fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            self._publish_metadata(version, meta)
         except FileExistsError:
             raise ConcurrentModificationError(
                 f"{op} on {self.path} lost the metadata version race; "
                 "re-run against the new table state"
             ) from None
-        try:
-            os.write(fd, json.dumps(meta, indent=1).encode())
-        finally:
-            os.close(fd)
-        with open(
-            os.path.join(self._meta_dir, "version-hint.text"), "w"
-        ) as f:
-            f.write(str(version))
         return version
 
     def rollback_to(self, snapshot_id: int) -> None:

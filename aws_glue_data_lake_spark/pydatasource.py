@@ -25,14 +25,14 @@ What the implementation exercises, deliberately one of each:
   ``read(start) -> (rows, nextOffset)`` / ``readBetweenOffsets`` (replay
   for recovery) / ``commit``. Each micro-batch advances the offset by one
   ``slab``; the finite feed then reports no new data, so
-  ``processAllAvailable`` drains it in exactly ``ceil(n_rows/slab)``
-  batches.
+  ``streaming/pipelines.drain_all`` drains it in exactly
+  ``ceil(n_rows/slab)`` batches.
 
 Availability note: ``Trigger.AvailableNow`` only consumes the simple
 stream reader's first prefetched slab (admission control for Python
 sources has no read-limit hook), so streaming queries over this source
-drain with ``processAllAvailable`` instead — see
-``streaming/pipelines.run_drain_all``.
+drain with ``streaming/pipelines.drain_all`` (or ``run_drain_all``)
+instead.
 """
 
 from __future__ import annotations

@@ -44,19 +44,6 @@ _MODULES = (
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-#: Names REGISTERED IN ROUND 7+, deferred behind the driver-validation
-#: backlog: 85 of the 237 r6-era queries have never had a driver
-#: CORRECTNESS row, and the driver checks only ~50 per round in registry
-#: order. A new registration must NOT steal one of those slots from the
-#: backlog (VERDICT r6 item 1), so these sort AFTER every never-green
-#: r6-era query but BEFORE already-green ones (they've still never been
-#: driver-checked at all). Once a name lands green in any
-#: CORRECTNESS_r*.json it leaves this tier automatically via the normal
-#: oldest-green rotation; drop it from this set at the next housekeeping
-#: pass.
-_DEFER_NEW: set[str] = set()
-
-
 def _green_round_by_query() -> dict[str, int]:
     """Latest round in which each query held a fully GREEN driver row
     (rows_match AND schema_match AND hash_match). Err/partial rows do NOT
@@ -111,16 +98,9 @@ def all_queries() -> dict[str, QueryFn]:
         return out
     green = _green_round_by_query()
     if green:
-        # Tiers: never-green backlog (-1) < new-this-round never-green
-        # (-0.5) < green rotated oldest-first. sorted() is stable: ties
-        # keep module order within each tier.
-        def _key(kv):
-            name = kv[0]
-            if name in green:
-                return green[name]
-            return -0.5 if name in _DEFER_NEW else -1
-
-        out = dict(sorted(out.items(), key=_key))
+        # Never-green backlog (-1) first, then green rotated oldest-first.
+        # sorted() is stable: ties keep module order.
+        out = dict(sorted(out.items(), key=lambda kv: green.get(kv[0], -1)))
     return out
 
 

@@ -21,9 +21,6 @@ Cross-engine determinism rules used throughout (SURVEY.md §5/§7 risks):
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -57,25 +54,6 @@ class Registry:
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Shorthand fixture-table scan."""
     return load_table(spark, sf_dir, name)
-
-
-#: mkdtemp dirs created by query fixtures (staged lake tables, schema-
-#: evolution scratch); removed at interpreter exit. Session-lifetime memos
-#: keep them referenced until then, so exit is the earliest safe point.
-_TMPDIRS: list[str] = []
-
-
-def session_tmpdir(prefix: str) -> str:
-    """mkdtemp that is rmtree'd at interpreter exit instead of leaking."""
-    d = tempfile.mkdtemp(prefix=prefix)
-    _TMPDIRS.append(d)
-    return d
-
-
-@atexit.register
-def _cleanup_tmpdirs() -> None:
-    while _TMPDIRS:
-        shutil.rmtree(_TMPDIRS.pop(), ignore_errors=True)
 
 
 # SQL fragment: exact decimal sum of an expression, reported as DOUBLE.

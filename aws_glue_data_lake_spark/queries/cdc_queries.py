@@ -17,7 +17,8 @@ from aws_glue_data_lake_spark.localdf import local_df
 from pyspark.sql import functions as F
 
 from aws_glue_data_lake_spark.operators.cdc import full_load, incremental_merge
-from aws_glue_data_lake_spark.queries.base import Registry, session_tmpdir, t
+from aws_glue_data_lake_spark.queries.base import Registry, t
+from aws_glue_data_lake_spark.session import scoped_conf, session_tmpdir
 from aws_glue_data_lake_spark.tables import ts_us_col, with_ts_us
 
 REGISTRY = Registry()
@@ -1269,25 +1270,24 @@ def lake_incremental_mv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Every job in the maintenance path is dimension-sized (deltas and the
     # MV are |status|x|priority| rows), so run the stream's many small jobs
     # at few shuffle partitions — 32-task rounds would be pure scheduling
-    # overhead (same save/restore contract as streaming/pipelines.py).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    q = (
-        feed.writeStream.foreachBatch(
-            lambda batch, _bid: maintain_mv_batch(mv, batch)
+    # overhead. The drain interleaves appends with catch-ups on one running
+    # query, so it keeps its own loop instead of a pipelines drain helper.
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": 4}):
+        q = (
+            feed.writeStream.foreachBatch(
+                lambda batch, _bid: maintain_mv_batch(mv, batch)
+            )
+            .option("checkpointLocation", f"{root}/chk")
+            .trigger(processingTime="0 seconds")
+            .start()
         )
-        .option("checkpointLocation", f"{root}/chk")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        q.processAllAvailable()  # drain the create commit
-        for i in (1, 2, 3):  # three later commits, drained incrementally
-            base.append(o.where(F.col("o_orderkey") % 4 == i))
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        try:
+            q.processAllAvailable()  # drain the create commit
+            for i in (1, 2, 3):  # three later commits, drained incrementally
+                base.append(o.where(F.col("o_orderkey") % 4 == i))
+                q.processAllAvailable()
+        finally:
+            q.stop()
     return (
         mv.read(spark)
         .select(

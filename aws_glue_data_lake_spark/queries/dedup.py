@@ -34,9 +34,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from aws_glue_data_lake_spark.localdf import local_df
 from aws_glue_data_lake_spark.queries.base import Registry, t
 from aws_glue_data_lake_spark.queries.textops import TOKS_SQL, toks, trigrams
+from aws_glue_data_lake_spark.session import session_memo
 
 REGISTRY = Registry()
 _q = REGISTRY.query
@@ -65,6 +65,7 @@ def shingles(tk: Column | None = None) -> Column:
     return F.array_distinct(trigrams(toks() if tk is None else tk))
 
 
+@session_memo
 def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, s) sketch base.
 
@@ -79,12 +80,6 @@ def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     same boundary is a materialized sketch *table* (compute once, write,
     reuse across dedup passes); ``persist()`` is its single-job stand-in.
     """
-    # applicationId is unique per SparkContext lifetime — unlike id(spark),
-    # it can't be recycled by GC to alias a dead session's persisted plan.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
     # The fixture is one parquet file with ONE row group, so the scan is a
     # single partition and the sketch compute (the CPU-heavy stage: per-doc
     # tokenize + shingle + 24 hash evals downstream) would run one-threaded.
@@ -101,22 +96,7 @@ def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size("s") > 0)
         .persist()
     )
-    _SHINGLE_CACHE[key] = out
     return out
-
-
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_shingle_cache() -> None:
-    """Unpersist and drop all cached sketch tables (test/teardown hook)."""
-    for cache in (_SHINGLE_CACHE, _MINHASH_CACHE, _BLOOM_GRAM_CACHE):
-        while cache:
-            _, df = cache.popitem()
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped — nothing to release
-                pass
 
 
 # ---------------------------------------------------------------------------
@@ -240,20 +220,12 @@ def sketch_minhash(shingled: DataFrame) -> DataFrame:
     return shingled.select("doc_id", mh_col.alias("m"))
 
 
+@session_memo
 def _minhash_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted+memoized signature table over the fixture corpus. The
     persist boundary is load-bearing (see _shingle_table); memoized because
     the LSH pair query and the components query share the signature."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _MINHASH_CACHE.get(key)
-    if cached is not None:
-        return cached
-    sk = sketch_minhash(_shingle_table(spark, sf_dir)).persist()
-    _MINHASH_CACHE[key] = sk
-    return sk
-
-
-_MINHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return sketch_minhash(_shingle_table(spark, sf_dir)).persist()
 
 
 def _cap_buckets(bands: DataFrame, keys=("band_idx", "band_key")) -> DataFrame:
@@ -813,16 +785,13 @@ LIMIT 20
 """
 
 
+@session_memo
 def _norm_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted+memoized (vec_id, label, embedding, norm) — the exact-
     decimal norm is the expensive shared input of BOTH banding variants
     (key emission reads it twice, the cosine join twice more), so one
     persist per (session, fixture) serves all four reads of each variant
     and both variants of the same suite run."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _NORM_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = t(spark, sf_dir, "embeddings")
     # The fixture parquet has ONE row group, so the scan is one task and
     # every decimal-exact norm (64 ops/row) and each downstream k-means /
@@ -838,27 +807,22 @@ def _norm_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.sqrt(ddot(F.col("embedding"), F.col("embedding"))).alias("norm"),
     ).persist()
-    _NORM_CACHE[key] = nv
     return nv
 
 
-_NORM_CACHE: dict[tuple[str, str], DataFrame] = {}
+def _band_join_cols(with_label: bool) -> list[str]:
+    return (["label"] if with_label else []) + ["p"] + [
+        f"b{i}" for i in range(1, _N_BAND_DIMS + 1)
+    ]
 
 
-#: (applicationId, sf_dir, with_label) → persisted candidate-key table.
-#: Memoized like _NORM_CACHE so repeat calls in one session reuse ONE
-#: cached RDD instead of stacking a new persist per call (ADVICE r14).
-_CAND_CACHE: dict[tuple[str, str, bool], DataFrame] = {}
-
-#: same memo for the top-k double-score pass's persisted frame
-_SCORED_CACHE: dict[tuple[str, str, bool], DataFrame] = {}
-
-
-def _embedding_cosine_cand(
-    spark: SparkSession, sf_dir: str, with_label: bool
-) -> DataFrame:
-    """Distinct banded candidate pairs (vec_a, vec_b) — the shared
-    blocker of the per-label and global variants."""
+@session_memo
+def _band_keys(spark: SparkSession, sf_dir: str, with_label: bool) -> DataFrame:
+    """Persisted, bucket-capped band-key table of every vector. It feeds
+    both sides of the candidate self-join, and without the boundary the
+    16-way explode + window count runs twice (projection collapse — same
+    trap as _shingle_table); memoized so repeat calls in one session reuse
+    ONE cached RDD instead of stacking a new persist per call."""
     nv = _norm_table(spark, sf_dir)
 
     def bucket(i: int, p: int) -> Column:
@@ -866,33 +830,32 @@ def _embedding_cosine_cand(
         phase = ((p >> (i - 1)) & 1) * _BAND_W
         return F.floor((scaled + phase) / (2 * _BAND_W))
 
-    join_cols = (["label"] if with_label else []) + ["p"] + [
-        f"b{i}" for i in range(1, _N_BAND_DIMS + 1)
-    ]
-    # Persist the capped key table: it feeds both sides of the self-join,
-    # and without the boundary the 16-way explode + window count runs
-    # twice (projection collapse — same trap as _shingle_table).
-    memo_key = (spark.sparkContext.applicationId, sf_dir, with_label)
-    keys = _CAND_CACHE.get(memo_key)
-    if keys is None:
-        keys = _cap_buckets(
-            nv.select(
-                "vec_id",
-                "label",
-                F.explode(
-                    F.array(*[
-                        F.struct(
-                            F.lit(p).alias("p"),
-                            *[bucket(i, p).alias(f"b{i}")
-                              for i in range(1, _N_BAND_DIMS + 1)],
-                        )
-                        for p in range(_N_PHASES)
-                    ])
-                ).alias("k"),
-            ).select("vec_id", "label", "k.*"),
-            keys=tuple(join_cols),
-        ).persist()
-        _CAND_CACHE[memo_key] = keys
+    return _cap_buckets(
+        nv.select(
+            "vec_id",
+            "label",
+            F.explode(
+                F.array(*[
+                    F.struct(
+                        F.lit(p).alias("p"),
+                        *[bucket(i, p).alias(f"b{i}")
+                          for i in range(1, _N_BAND_DIMS + 1)],
+                    )
+                    for p in range(_N_PHASES)
+                ])
+            ).alias("k"),
+        ).select("vec_id", "label", "k.*"),
+        keys=tuple(_band_join_cols(with_label)),
+    ).persist()
+
+
+def _embedding_cosine_cand(
+    spark: SparkSession, sf_dir: str, with_label: bool
+) -> DataFrame:
+    """Distinct banded candidate pairs (vec_a, vec_b) — the shared
+    blocker of the per-label and global variants."""
+    keys = _band_keys(spark, sf_dir, with_label)
+    join_cols = _band_join_cols(with_label)
     a = keys.select(F.col("vec_id").alias("vec_a"), *join_cols)
     b = keys.select(F.col("vec_id").alias("vec_b"), *join_cols)
     return (
@@ -933,6 +896,28 @@ def _embedding_cosine_pairs(
     )
 
 
+@session_memo
+def _fast_scored(spark: SparkSession, sf_dir: str, with_label: bool) -> DataFrame:
+    """Persisted (vec_a, vec_b, fcos): every banded candidate pair with its
+    plain-double cosine — tiny, (id, id, double) per pair."""
+    cand = _embedding_cosine_cand(spark, sf_dir, with_label)
+    na, nb = _embedding_sides(spark, sf_dir)
+    fast = F.aggregate(
+        F.zip_with(
+            F.col("ea"), F.col("eb"),
+            lambda x, y: x.cast("double") * y.cast("double"),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    ) / (F.col("na") * F.col("nb"))
+    return (
+        cand.join(na, "vec_a")
+        .join(nb, "vec_b")
+        .select("vec_a", "vec_b", fast.alias("fcos"))
+        .persist()
+    )
+
+
 def _embedding_cosine_topk(
     spark: SparkSession, sf_dir: str, with_label: bool
 ) -> DataFrame:
@@ -947,26 +932,8 @@ def _embedding_cosine_topk(
     2e-6 margin. The exact predicate still orders the final rows — the
     output is bit-identical, degrading only to a full rescore if the
     margin captures everything."""
-    cand = _embedding_cosine_cand(spark, sf_dir, with_label)
+    scored = _fast_scored(spark, sf_dir, with_label)
     na, nb = _embedding_sides(spark, sf_dir)
-    fast = F.aggregate(
-        F.zip_with(
-            F.col("ea"), F.col("eb"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    ) / (F.col("na") * F.col("nb"))
-    memo_key = (spark.sparkContext.applicationId, sf_dir, with_label)
-    scored = _SCORED_CACHE.get(memo_key)
-    if scored is None:
-        scored = (
-            cand.join(na, "vec_a")
-            .join(nb, "vec_b")
-            .select("vec_a", "vec_b", fast.alias("fcos"))
-            .persist()  # tiny: (id, id, double) per candidate pair
-        )
-        _SCORED_CACHE[memo_key] = scored
     th = (
         scored.orderBy(F.desc("fcos"))
         .limit(20)
@@ -1374,7 +1341,7 @@ conf AS (SELECT DISTINCT doc_id FROM bg JOIN cg USING (g))
 """
 
 
-
+@session_memo
 def _bloom_gram_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted+memoized (doc_id, g) distinct word-8-gram table — one
     tokenize+gram pass serves the corpus filter build, the batch probe,
@@ -1383,22 +1350,24 @@ def _bloom_gram_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     group fixture scan across cores before the CPU-heavy gram build)."""
     from aws_glue_data_lake_spark.queries.textops import ngrams
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BLOOM_GRAM_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    out = d.select(
+    return d.select(
         "doc_id",
         F.explode(F.array_distinct(ngrams(toks(), _BLOOM_GRAM_N))).alias("g"),
     ).persist()
-    _BLOOM_GRAM_CACHE[key] = out
-    return out
 
 
-_BLOOM_GRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
+@session_memo
+def _bloom_corpus_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted distinct gram set of the corpus (the non-batch docs): it
+    feeds the bitmap build AND the exact confirmation join, and the sizing
+    count materializes it — without the boundary each subtree re-runs the
+    distinct shuffle."""
+    is_batch = F.col("doc_id") % _BLOOM_BATCH_MOD == 0
+    grams = _bloom_gram_table(spark, sf_dir)
+    return grams.where(~is_batch).select("g").distinct().persist()
 
 
 @_q(
@@ -1423,16 +1392,7 @@ def dedup_bloom_gram_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % _BLOOM_BATCH_MOD == 0
     grams = _bloom_gram_table(spark, sf_dir)
-    # Persist the distinct corpus gram set: it feeds the bitmap build AND
-    # the exact confirmation join, and the sizing count materializes it —
-    # without the boundary each subtree re-runs the distinct shuffle.
-    # Memoized alongside the gram table so repeat calls don't stack
-    # persisted copies.
-    cg_key = (spark.sparkContext.applicationId, sf_dir + "#cg")
-    cg = _BLOOM_GRAM_CACHE.get(cg_key)
-    if cg is None:
-        cg = grams.where(~is_batch).select("g").distinct().persist()
-        _BLOOM_GRAM_CACHE[cg_key] = cg
+    cg = _bloom_corpus_grams(spark, sf_dir)
     # Scalar A1-class read: the corpus gram count sizes the bitmap so
     # bits-per-key stays constant at any corpus scale.
     m = _BLOOM_BPK * cg.count()

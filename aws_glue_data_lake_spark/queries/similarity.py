@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from aws_glue_data_lake_spark.queries.base import Registry, t
 from aws_glue_data_lake_spark.queries.dedup import _DOT_SQL, ddot
 from aws_glue_data_lake_spark.queries.textops import TOKS_SQL
+from aws_glue_data_lake_spark.session import session_memo, session_tmpdir
 
 REGISTRY = Registry()
 _q = REGISTRY.query
@@ -266,15 +267,10 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # |probes| / |buckets| of the data via directory pruning, and the store
 # doubles as the co-clustered layout for batch rescoring jobs.
 # ---------------------------------------------------------------------------
+@session_memo
 def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build-once IVF store: assignments partitioned by centroid_id +
     the centroid table, memoized per (session, fixture)."""
-    from aws_glue_data_lake_spark.queries.base import session_tmpdir
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _IVF_STORE.get(key)
-    if cached is not None:
-        return cached
     nv = _nv(spark, sf_dir)
     cent = nv.where(F.col("vec_id") < _N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"),
@@ -296,11 +292,7 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
         "mapreduce.fileoutputcommitter.algorithm.version", "1"
     ).parquet(f"{d}/assignments")
     cent.write.parquet(f"{d}/centroids")
-    _IVF_STORE[key] = d
     return d
-
-
-_IVF_STORE: dict[tuple[str, str], str] = {}
 
 
 @_q("sim_ivf_persisted_probe", oracle=REGISTRY.oracles["sim_ivf_topk"])
@@ -838,23 +830,16 @@ def _km_refined_centroids(nv: DataFrame) -> DataFrame:
     return cent
 
 
+@session_memo
 def _km_assigned(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Memoized (refined centroids, final assignment) — the k-means index
     is built once per (session, fixture) and shared by every consumer in
     the suite (probe search, semantic dedup), exactly as a real deployment
     materializes the assignment table once per index build."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _KM_CACHE.get(key)
-    if cached is not None:
-        return cached
     nv = _nv(spark, sf_dir)
     cent = _km_refined_centroids(nv).persist()
     assigned = _km_assign(nv, cent).persist()
-    _KM_CACHE[key] = (cent, assigned)
     return cent, assigned
-
-
-_KM_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
 def _km_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

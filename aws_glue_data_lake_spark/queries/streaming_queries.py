@@ -23,13 +23,17 @@ from pyspark.sql import functions as F
 from aws_glue_data_lake_spark.concurrency import run_jobs
 from aws_glue_data_lake_spark.lake import LakeTable
 from aws_glue_data_lake_spark.operators.cdc import merge_cdc_batch
-from aws_glue_data_lake_spark.queries.base import Registry, session_tmpdir
+from aws_glue_data_lake_spark.queries.base import Registry
+from aws_glue_data_lake_spark.session import session_memo, session_tmpdir
 from aws_glue_data_lake_spark.queries.cdc_queries import _OP_CASE_SQL, _SENTINEL_US
 from aws_glue_data_lake_spark.tables import ts_us_col
 from aws_glue_data_lake_spark.streaming.pipelines import (
+    drain_all,
+    drain_available_now,
     read_events_stream,
     read_staged_batches_stream,
     run_available_now,
+    run_drain_all,
     session_window_agg,
     stage_ordered_batches,
     tumbling_window_agg,
@@ -220,20 +224,11 @@ def streaming_cdc_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_cdc_batch(table, batch, keys=["user_id"], date_col="ts",
                         tiebreakers=["event_id"], sentinel=_SENTINEL_US)
 
-    q = (
-        feed.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", f"{tmp}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        feed.writeStream.foreachBatch(merge_batch).option(
+            "checkpointLocation", f"{tmp}/chk"
+        )
     )
-    try:
-        if not q.awaitTermination(120):
-            raise TimeoutError(
-                "CDC stream did not drain within 120s — refusing to read "
-                "a stale or missing target"
-            )
-    finally:
-        q.stop()
     final = table.read(spark).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -420,21 +415,18 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final.orderBy("window_start_us", "event_type")
 
 
+@session_memo
 def _late_batches_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the four-batch late-data fixture once per (session, sf_dir)."""
     from aws_glue_data_lake_spark.queries.base import t
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stage = _LATE_STAGE.get(key)
-    if stage is not None:
-        return stage
     ev = t(spark, sf_dir, "events")
     ts_us = ts_us_col(ev)
     tmax = ev.agg(F.max(ts_us)).first()[0]
     old = ts_us <= F.lit(tmax - _MID_US)
     mid = (ts_us > F.lit(tmax - _MID_US)) & (ts_us <= F.lit(tmax - _FRESH_US))
     even = F.col("event_id") % 2 == 0
-    stage = stage_ordered_batches(
+    return stage_ordered_batches(
         [
             ev.where(old & even),
             ev.where(mid),
@@ -442,11 +434,6 @@ def _late_batches_dir(spark: SparkSession, sf_dir: str) -> str:
             ev.where(ts_us > F.lit(tmax - _FRESH_US)),
         ]
     )
-    _LATE_STAGE[key] = stage
-    return stage
-
-
-_LATE_STAGE: dict[tuple[str, str], str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -627,16 +614,13 @@ def streaming_stream_join_funnel_tight(spark: SparkSession, sf_dir: str) -> Data
     return final.orderBy("user_id", "view_event_id", "purchase_event_id")
 
 
+@session_memo
 def _funnel_tight_batches_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the five-batch tight-funnel fixture once per (session, sf_dir):
     four time-quartile batches in order, then quartile-0's purchases
     re-delivered days late as the final batch."""
     from aws_glue_data_lake_spark.queries.base import t
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stage = _TIGHT_STAGE.get(key)
-    if stage is not None:
-        return stage
     ev = t(spark, sf_dir, "events")
     ts_us = ts_us_col(ev)
     tmin, tmax = ev.agg(F.min(ts_us), F.max(ts_us)).first()
@@ -658,15 +642,10 @@ def _funnel_tight_batches_dir(spark: SparkSession, sf_dir: str) -> str:
     )
     slab = (F.col("_band") == 0) & (F.col("event_type") == "purchase")
     helper_cols = ("_us", "_band")
-    stage = stage_ordered_batches(
+    return stage_ordered_batches(
         [banded.where((F.col("_band") == i) & ~slab).drop(*helper_cols) for i in range(4)]
         + [banded.where(slab).drop(*helper_cols)]
     )
-    _TIGHT_STAGE[key] = stage
-    return stage
-
-
-_TIGHT_STAGE: dict[tuple[str, str], str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -717,30 +696,22 @@ def streaming_dedup_replayed_ingest(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+@session_memo
 def _replay_batches_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the three-batch replayed-ingest fixture once per
     (session, sf_dir): b0 = two thirds of events, b1 = an exact replay of
     half of b0 (the at-least-once redelivery), b2 = the final third."""
     from aws_glue_data_lake_spark.queries.base import t
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stage = _REPLAY_STAGE.get(key)
-    if stage is not None:
-        return stage
     ev = t(spark, sf_dir, "events")
     first = F.col("event_id") % 3 != 2
-    stage = stage_ordered_batches(
+    return stage_ordered_batches(
         [
             ev.where(first),
             ev.where(F.col("event_id") % 6 == 0),  # replayed slab of b0
             ev.where(~first),
         ]
     )
-    _REPLAY_STAGE[key] = stage
-    return stage
-
-
-_REPLAY_STAGE: dict[tuple[str, str], str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -1019,16 +990,13 @@ def streaming_dedup_then_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame
     return final.orderBy("window_start_us", "event_type")
 
 
+@session_memo
 def _chain_batches_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the eight-batch chained-stateful fixture once per
     (session, sf_dir): four time-quartile slabs in order, each immediately
     followed by an exact redelivery of its even-event_id half."""
     from aws_glue_data_lake_spark.queries.base import t
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stage = _CHAIN_STAGE.get(key)
-    if stage is not None:
-        return stage
     ev = t(spark, sf_dir, "events")
     ts_us = ts_us_col(ev)
     tmin, tmax = ev.agg(F.min(ts_us), F.max(ts_us)).first()
@@ -1051,12 +1019,7 @@ def _chain_batches_dir(spark: SparkSession, sf_dir: str) -> str:
         slab = banded.where(F.col("_band") == i).drop("_us", "_band")
         batches.append(slab)
         batches.append(slab.where(F.col("event_id") % 2 == 0))
-    stage = stage_ordered_batches(batches)
-    _CHAIN_STAGE[key] = stage
-    return stage
-
-
-_CHAIN_STAGE: dict[tuple[str, str], str] = {}
+    return stage_ordered_batches(batches)
 
 
 # ---------------------------------------------------------------------------
@@ -1171,20 +1134,11 @@ def streaming_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         table.upsert(adj.select(*dim_cols), keys=["user_id", "version"])
 
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", f"{tmp}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        feed.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", f"{tmp}/chk"
+        )
     )
-    try:
-        if not q.awaitTermination(120):
-            raise TimeoutError(
-                "SCD2 stream did not drain within 120s — refusing to read "
-                "a stale or missing dimension"
-            )
-    finally:
-        q.stop()
     return (
         table.read(spark)
         .where(F.col("user_id") < 200)
@@ -1193,30 +1147,22 @@ def streaming_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def _scd2_batches_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the CDC feed as four time-band batches (no replays): SCD2
     increments assume per-key change order across batches, and banding by
     ts guarantees it (equal timestamps land in the same band)."""
     from aws_glue_data_lake_spark.queries.base import t
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stage = _SCD2_STAGE.get(key)
-    if stage is not None:
-        return stage
     ev = t(spark, sf_dir, "events")
     ts_us = ts_us_col(ev)
     tmin, tmax = ev.agg(F.min(ts_us), F.max(ts_us)).first()
     banded = ev.withColumn("_us", ts_us).withColumn(
         "_band", F.expr(f"(4 * (_us - {tmin})) div {tmax - tmin + 1}")
     )
-    stage = stage_ordered_batches(
+    return stage_ordered_batches(
         [banded.where(F.col("_band") == i).drop("_us", "_band") for i in range(4)]
     )
-    _SCD2_STAGE[key] = stage
-    return stage
-
-
-_SCD2_STAGE: dict[tuple[str, str], str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -1505,6 +1451,7 @@ def streaming_tws_event_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def _banded_events_dir(spark: SparkSession, sf_dir: str, n_bands: int) -> str:
     """Stage events as ``n_bands`` time-ordered bands (band k holds the
     k-th ts quantile slab), memoized per session — the replay shape whose
@@ -1512,27 +1459,18 @@ def _banded_events_dir(spark: SparkSession, sf_dir: str, n_bands: int) -> str:
     require (see streaming_tws_event_timers)."""
     from aws_glue_data_lake_spark.queries.base import t
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_bands)
-    stage = _BANDED_STAGE.get(key)
-    if stage is not None:
-        return stage
     ev = t(spark, sf_dir, "events")
     ts_us = ts_us_col(ev)
     tmin, tmax = ev.agg(F.min(ts_us), F.max(ts_us)).first()
     banded = ev.withColumn("_us", ts_us).withColumn(
         "_band", F.expr(f"({n_bands} * (_us - {tmin})) div {tmax - tmin + 1}")
     )
-    stage = stage_ordered_batches(
+    return stage_ordered_batches(
         [
             banded.where(F.col("_band") == i).drop("_us", "_band")
             for i in range(n_bands)
         ]
     )
-    _BANDED_STAGE[key] = stage
-    return stage
-
-
-_BANDED_STAGE: dict[tuple[str, str, int], str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -1543,7 +1481,7 @@ _BANDED_STAGE: dict[tuple[str, str, int], str] = {}
 # per micro-batch, so the drain is 5 genuine batches with cross-batch
 # aggregate state merge; the oracle regenerates the feed arithmetically.
 # availableNow can't pace Python sources (no read-limit hook), so the
-# drain uses processAllAvailable — see streaming/pipelines.run_drain_all.
+# drain is streaming/pipelines.run_drain_all.
 # ---------------------------------------------------------------------------
 @_q(
     "streaming_python_datasource",
@@ -1561,7 +1499,6 @@ ORDER BY op
 )
 def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_glue_data_lake_spark.pydatasource import register_feed_source
-    from aws_glue_data_lake_spark.streaming.pipelines import run_drain_all
 
     register_feed_source(spark)
     stream = (
@@ -1626,18 +1563,12 @@ def streaming_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
         .select("id", "op", "value")
     )
-    q = (
+    drain_all(
         stream.writeStream.format("json_stream_sink")
         .option("path", out_dir)
         .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
         .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     back = spark.read.schema("id BIGINT, op STRING, value DOUBLE").json(
         os.path.join(out_dir, "batch-*.json")
     )
@@ -1681,7 +1612,6 @@ def streaming_lake_cdf_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_glue_data_lake_spark.lake import LakeTable
     from aws_glue_data_lake_spark.lakecdf import register_lake_cdf_source
     from aws_glue_data_lake_spark.queries.base import t as _t
-    from aws_glue_data_lake_spark.streaming.pipelines import run_drain_all
 
     register_lake_cdf_source(spark)
     ev = _t(spark, sf_dir, "events")
@@ -1988,17 +1918,11 @@ def streaming_two_sink_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fan_out)
-        .option("checkpointLocation", f"{tmp}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream.writeStream.foreachBatch(fan_out).option(
+            "checkpointLocation", f"{tmp}/chk"
+        )
     )
-    try:
-        if not q.awaitTermination(120):
-            raise TimeoutError("two-sink stream did not drain within 120s")
-    finally:
-        q.stop()
     # at-least-once simulation: redeliver the FIRST batch's payload with
     # its original batch_id — both tables must detect the replay and no-op
     replay = bronze.read(spark).limit(50)
@@ -2122,17 +2046,11 @@ def streaming_dlq_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    q = (
-        feed.writeStream.foreachBatch(route)
-        .option("checkpointLocation", f"{tmp}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        feed.writeStream.foreachBatch(route).option(
+            "checkpointLocation", f"{tmp}/chk"
+        )
     )
-    try:
-        if not q.awaitTermination(120):
-            raise TimeoutError("DLQ stream did not drain within 120s")
-    finally:
-        q.stop()
     main_row = main.read(spark).agg(
         F.lit("main").alias("sink"),
         F.lit(None).cast("string").alias("reason"),
@@ -2214,19 +2132,13 @@ def streaming_cdf_rate_limited(
         .option("maxFilesPerTrigger", "2")
         .load()
     )
-    q = (
+    drain_all(  # bounded catch-up to the pinned tip
         feed.writeStream.foreachBatch(sink)
         .option(
             "checkpointLocation", session_tmpdir("cdf_rate_ck_") + "/ck"
         )
         .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
     )
-    try:
-        q.processAllAvailable()  # bounded catch-up to the pinned tip
-    finally:
-        q.stop()
     # the limiter's contract: the 8-file commit split across batches
     assert len(batch_rows) >= 3, batch_rows
     total = o.count()

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_glue_data_lake_spark.queries.base import Registry, t
+from aws_glue_data_lake_spark.session import session_memo
 from aws_glue_data_lake_spark.tables import ts_us_col, with_ts_us
 
 REGISTRY = Registry()
@@ -198,6 +199,35 @@ def window_running_and_moving(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_custkey", "o_orderdate", "o_orderkey")
 
 
+@session_memo
+def _ranged_spend(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, dict[int, int], int]:
+    """(persisted range-partitioned customer spend, pid → rank offset of
+    the partition's first row, total rows)."""
+    o = t(spark, sf_dir, "orders")
+    spend = o.groupBy("o_custkey").agg(
+        F.sum(F.col("o_totalprice").cast("decimal(18,6)"))
+        .cast("double")
+        .alias("total_spend")
+    )
+    ranged = spend.repartitionByRange(
+        spark.sparkContext.defaultParallelism,
+        F.col("total_spend").desc(),
+        F.col("o_custkey"),
+    ).withColumn("pid", F.spark_partition_id()).persist()
+    counts = sorted(
+        (r["pid"], r["c"])
+        for r in ranged.groupBy("pid").agg(F.count("*").alias("c")).collect()
+    )
+    offsets: dict[int, int] = {}
+    acc = 0
+    for pid, c in counts:
+        offsets[pid] = acc
+        acc += c
+    return ranged, offsets, acc
+
+
 @_q(
     "window_ntile_customer_value",
     oracle="""
@@ -224,31 +254,7 @@ def window_ntile_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     follows from NTILE's exact rank arithmetic, so the oracle keeps plain
     NTILE(4) and still hash-matches, ties included (the sort carries the
     unique o_custkey tiebreaker)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _NTILE_CACHE.get(key)
-    if hit is None:
-        o = t(spark, sf_dir, "orders")
-        spend = o.groupBy("o_custkey").agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("total_spend")
-        )
-        ranged = spend.repartitionByRange(
-            spark.sparkContext.defaultParallelism,
-            F.col("total_spend").desc(),
-            F.col("o_custkey"),
-        ).withColumn("pid", F.spark_partition_id()).persist()
-        counts = sorted(
-            (r["pid"], r["c"])
-            for r in ranged.groupBy("pid").agg(F.count("*").alias("c")).collect()
-        )
-        offsets: dict[int, int] = {}
-        acc = 0
-        for pid, c in counts:
-            offsets[pid] = acc
-            acc += c
-        hit = _NTILE_CACHE[key] = (ranged, offsets, acc)
-    ranged, offsets, n_total = hit
+    ranged, offsets, n_total = _ranged_spend(spark, sf_dir)
     quarter, rem = divmod(n_total, 4)
     ends = [k * quarter + min(k, rem) for k in (1, 2, 3)]
     off = F.create_map(
@@ -271,26 +277,6 @@ def window_ntile_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total_spend",
         quartile.cast("int").alias("spend_quartile"),
     ).orderBy("o_custkey")
-
-
-#: (appId, sf_dir) → (persisted range-partitioned spend, pid→rank offset, N).
-#: Lifetime: one entry per (application, fixture) pair for the life of the
-#: Spark application — bounded because a session touches a handful of
-#: sf_dirs, and keying by appId means a restarted session can't resurrect
-#: another app's unpersisted handle. clear_ntile_cache() is the explicit
-#: release (tests/teardown); bench runs are warm-cache after the first hit,
-#: per the memo discipline note in queries/__init__.
-_NTILE_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def clear_ntile_cache() -> None:
-    """Unpersist and drop the memoized spend tables (test/teardown hook)."""
-    while _NTILE_CACHE:
-        _, (df, _, _) = _NTILE_CACHE.popitem()
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
 
 
 # --------------------------------------------------------------------------

@@ -8,9 +8,16 @@ here (AQE, broadcast thresholds, pushdown) are the plans we'd ship.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import functools
+import inspect
 import os
+import shutil
+import tempfile
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 # The reference depends on case-insensitive column resolution: it drops the
 # column "Op" while the data column is "op" (icberg/iceberg_tables.py:110,149)
@@ -169,3 +176,98 @@ def get_catalog_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# ---------------------------------------------------------------------------
+# Session-lived state: the one memo, scratch dirs and scoped conf.
+# ---------------------------------------------------------------------------
+
+#: (function, applicationId, args) -> value of every @session_memo call.
+_MEMO: dict[tuple, object] = {}
+
+
+def session_memo(fn):
+    """Memoize ``fn(spark, *args)`` for the life of the Spark application.
+
+    Entries are keyed on ``(fn, applicationId, args)``; the arguments after
+    ``spark`` must be hashable (defaults are bound in, so positional and
+    keyword calls share an entry). applicationId is unique per SparkContext
+    lifetime, so a restarted session can never alias a dead one's entry.
+    The first miss under a new applicationId unpersists and drops every
+    entry of other applications: the memo holds one application's state at
+    most. Values are immutable plans, staged dirs or tuples of them; a
+    persisted DataFrame (or tuple element) is unpersisted on release.
+
+    No lock is held across a build: a build may start ``run_jobs`` threads
+    that call other memoized functions, which a memo-wide lock would
+    deadlock. Two threads missing the same key at once may therefore both
+    build; the last store wins.
+    """
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def memoized(spark: SparkSession, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        app = spark.sparkContext.applicationId
+        key = (fn, app, tuple(bound.arguments.values())[1:])
+        try:
+            return _MEMO[key]
+        except KeyError:
+            pass
+        _release_other_apps(app)
+        value = _MEMO[key] = fn(spark, *args, **kwargs)
+        return value
+
+    return memoized
+
+
+def _release_other_apps(app: str) -> None:
+    for key in [k for k in list(_MEMO) if k[1] != app]:
+        value = _MEMO.pop(key, None)
+        for v in value if isinstance(value, tuple) else (value,):
+            if isinstance(v, DataFrame) and v.is_cached:
+                try:
+                    v.unpersist()
+                except Py4JError:  # its SparkContext is stopped: cache gone
+                    pass
+
+
+#: mkdtemp dirs handed out by session_tmpdir, removed at interpreter exit.
+#: Memo entries and the DataFrames built over them keep the dirs in use
+#: for as long as the process may touch them, so exit is the safe point.
+_TMPDIRS: list[str] = []
+
+
+def session_tmpdir(prefix: str) -> str:
+    """mkdtemp that is rmtree'd at interpreter exit instead of leaking."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _TMPDIRS.append(d)
+    return d
+
+
+@atexit.register
+def _cleanup_tmpdirs() -> None:
+    while _TMPDIRS:
+        shutil.rmtree(_TMPDIRS.pop(), ignore_errors=True)
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, object]):
+    """Set runtime SQL conf for the body of the ``with`` and restore it
+    after: a key that held a value gets it back, an unset key is unset
+    again. For settings that a streaming query captures at ``start()``
+    (shuffle partitions size its state store, the state store provider),
+    scoping around the drain leaves other queries on the session's own
+    values."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -28,14 +28,13 @@ continuous trigger; the dataflow is unchanged.
 
 from __future__ import annotations
 
-import atexit
 import itertools
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -43,6 +42,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from aws_glue_data_lake_spark.session import scoped_conf, session_memo, session_tmpdir
 
 #: Events schema with the LEGACY int64 epoch-ns event time. Kept as the
 #: synthetic-fixture schema for tests that pin the legacy-producer path;
@@ -74,28 +75,32 @@ def _stream_with_event_time(spark: SparkSession, stage: str, reader_opts) -> Dat
         "event_time", F.timestamp_micros(F.col("ts_us"))
     )
 
+
 _run_ids = itertools.count()
 
-#: (applicationId, sf_dir, n_files) → staged drop-dir (see read_events_stream).
-_EVENTS_STAGE: dict[tuple[str, str, int | None], str] = {}
-
-#: Every mkdtemp drop-dir this module creates, removed at interpreter exit
-#: so repeated sessions don't leak staged parquet into the temp dir (the
-#: per-applicationId memos in streaming_queries keep dirs alive for the
-#: session, so cleanup can't happen any earlier than exit).
-_STAGED_DIRS: list[str] = []
+#: Upper bound on one availableNow drain: a replay that runs longer is an
+#: error, never a partial result.
+_DRAIN_TIMEOUT_S = 120
 
 
-def _staged_tmpdir(prefix: str) -> str:
-    stage = tempfile.mkdtemp(prefix=prefix)
-    _STAGED_DIRS.append(stage)
+@session_memo
+def _events_stage(spark: SparkSession, sf_dir: str, n_files: int | None) -> str:
+    """The events fixture as a drop-dir: the file symlinked in (one batch),
+    or re-split into ``n_files`` files. Immutable once written, so every
+    query over the same replay shape (tumbling_multibatch and the funnel
+    both drain the 6-file split) shares one staging write."""
+    stage = session_tmpdir("events_stream_")
+    if n_files is None:
+        # Zero-copy staging, read-only on the fixture.
+        os.symlink(
+            os.path.join(sf_dir, "events.parquet"),
+            os.path.join(stage, "events.parquet"),
+        )
+    else:
+        spark.read.parquet(
+            os.path.join(sf_dir, "events.parquet")
+        ).repartition(n_files).write.mode("overwrite").parquet(stage)
     return stage
-
-
-@atexit.register
-def _cleanup_staged_dirs() -> None:
-    while _STAGED_DIRS:
-        shutil.rmtree(_STAGED_DIRS.pop(), ignore_errors=True)
 
 
 def read_events_stream(
@@ -113,25 +118,8 @@ def read_events_stream(
     multi-batch replay that exercises cross-batch state merge and
     watermark advancement."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # The staged drop-dir is immutable once written — memoize per
-    # (session, sf_dir, n_files) so every query over the same replay shape
-    # (tumbling_multibatch and the funnel both drain the 6-file split)
-    # shares one staging write instead of re-partitioning the fixture.
-    memo_key = (spark.sparkContext.applicationId, sf_dir, n_files)
-    stage = _EVENTS_STAGE.get(memo_key)
-    if stage is None:
-        stage = _staged_tmpdir("events_stream_")
-        if n_files is None:
-            # Zero-copy staging, read-only on the fixture.
-            os.symlink(
-                os.path.join(sf_dir, "events.parquet"),
-                os.path.join(stage, "events.parquet"),
-            )
-        else:
-            spark.read.parquet(
-                os.path.join(sf_dir, "events.parquet")
-            ).repartition(n_files).write.mode("overwrite").parquet(stage)
-        _EVENTS_STAGE[memo_key] = stage
+    stage = _events_stage(spark, sf_dir, n_files)
+
     def _opts(reader):
         if max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -156,7 +144,7 @@ def stage_ordered_batches(batches: list[DataFrame]) -> str:
     import time
     from concurrent.futures import ThreadPoolExecutor
 
-    stage = _staged_tmpdir("events_batches_")
+    stage = session_tmpdir("events_batches_")
     now = time.time()
 
     def _write(i_df):
@@ -235,11 +223,49 @@ def session_window_agg(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
+def drain_available_now(writer: DataStreamWriter) -> None:
+    """Start ``writer`` under an availableNow trigger, wait until it has
+    consumed everything the source held at start, and stop it. A drain
+    still running after ``_DRAIN_TIMEOUT_S`` raises instead of letting the
+    caller read a partial sink."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not drain within "
+                f"{_DRAIN_TIMEOUT_S}s — refusing to read a partial sink"
+            )
+    finally:
+        q.stop()
+
+
+def drain_all(writer: DataStreamWriter) -> None:
+    """Start ``writer`` under an unpaced micro-batch trigger, block until
+    the source reports no new offsets, and stop it.
+
+    For sources that pace themselves by offsets (a custom Python data
+    source emitting one slab per micro-batch, a rate-limited CDF source):
+    ``Trigger.AvailableNow`` consumes only the first prefetched slab of a
+    Python stream reader (the admission control API has no Python
+    read-limit hook), while ``processAllAvailable()`` returns after exactly
+    ceil(total/slab) batches for a finite feed."""
+    q = writer.trigger(processingTime="0 seconds").start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _memory_sink(
+    result: DataFrame, output_mode: str
+) -> tuple[str, DataStreamWriter]:
+    name = f"stream_result_{next(_run_ids)}"
+    writer = result.writeStream.format("memory").queryName(name)
+    return name, writer.outputMode(output_mode)
+
+
 def run_available_now(
-    result: DataFrame,
-    output_mode: str,
-    timeout_s: int = 120,
-    shuffle_partitions: int | None = 8,
+    result: DataFrame, output_mode: str, shuffle_partitions: int = 8
 ) -> DataFrame:
     """Drain the stream with an availableNow trigger into a uniquely-named
     in-memory table; return the final table as a batch DataFrame.
@@ -253,64 +279,19 @@ def run_available_now(
     (state shards should be ~100MB), not to the batch-side default.
     """
     spark = result.sparkSession
-    name = f"stream_result_{next(_run_ids)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_s)
-            if not finished:
-                raise TimeoutError(
-                    f"streaming query {name!r} did not drain within "
-                    f"{timeout_s}s — refusing to read a partial sink"
-                )
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    name, writer = _memory_sink(result, output_mode)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": shuffle_partitions}):
+        drain_available_now(writer)
     return spark.table(name)
 
 
 def run_drain_all(
-    result: DataFrame,
-    output_mode: str,
-    shuffle_partitions: int | None = 8,
+    result: DataFrame, output_mode: str, shuffle_partitions: int = 8
 ) -> DataFrame:
-    """Drain a stream whose source paces itself by offsets (e.g. a custom
-    Python data source emitting one slab per micro-batch) into a
-    uniquely-named memory table, then return it as a batch DataFrame.
-
-    ``Trigger.AvailableNow`` cannot be used here: for Python stream
-    readers it only consumes the first prefetched slab (the admission
-    control API has no Python read-limit hook), so this helper runs an
-    unpaced micro-batch trigger and blocks on ``processAllAvailable()`` —
-    which returns once the source reports no new offsets, i.e. after
-    exactly ceil(total/slab) batches for a finite feed."""
+    """``run_available_now`` for offset-paced sources: the same memory sink,
+    drained by ``drain_all``."""
     spark = result.sparkSession
-    name = f"stream_result_{next(_run_ids)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    name, writer = _memory_sink(result, output_mode)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": shuffle_partitions}):
+        drain_all(writer)
     return spark.table(name)

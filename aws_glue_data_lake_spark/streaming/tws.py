@@ -37,9 +37,10 @@ batch groupBy.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import sys
+
+from aws_glue_data_lake_spark.session import scoped_conf
 
 #: Candidate directories containing a pure-Python ``google/protobuf``
 #: runtime package. Only used when ``import google.protobuf`` fails from
@@ -134,7 +135,6 @@ _ROCKSDB_TUNING: dict[str, str] = {
 }
 
 
-@contextlib.contextmanager
 def rocksdb_state_store(spark):
     """Scope ``RocksDBStateStoreProvider`` (+ commit tuning) to one
     streaming query start.
@@ -143,23 +143,7 @@ def rocksdb_state_store(spark):
     so it must be set before and can be restored right after the drain —
     leaving the session's other streaming queries on their default store.
     """
-    scoped = {_PROVIDER_CONF: _ROCKSDB_PROVIDER, **_ROCKSDB_TUNING}
-    prev: dict[str, str | None] = {}
-    for k in scoped:
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
+    return scoped_conf(spark, {_PROVIDER_CONF: _ROCKSDB_PROVIDER, **_ROCKSDB_TUNING})
 
 
 try:  # gate: StatefulProcessor only exists on PySpark >= 4.0
@@ -178,10 +162,11 @@ except ImportError:  # pragma: no cover - PySpark < 4.0
 class UserTypeStatsProcessor(StatefulProcessor):
     """Per-user running stats with TWO typed state handles:
 
-    - ``ValueState`` ``(n, vsum_us)`` — event count + exact value sum in
-      integer micro-units (fixture values carry ≤6 decimals, so scaling to
-      int64 keeps the cross-batch accumulation associative and drift-free,
-      same trick as the applyInPandasWithState twin);
+    - ``ValueState`` ``(n, vsum_us, ntypes)`` — event count, exact value
+      sum in integer micro-units (fixture values carry ≤6 decimals, so
+      scaling to int64 keeps the cross-batch accumulation associative and
+      drift-free, same trick as the applyInPandasWithState twin) and the
+      MapState's key count;
     - ``MapState`` ``event_type → count`` — per-type counts whose key
       cardinality (distinct types per user) is what the emitted
       ``n_types`` reads out. A MapState entry is one RocksDB KV pair, so
@@ -200,8 +185,11 @@ class UserTypeStatsProcessor(StatefulProcessor):
         # crossings). The count is maintained exactly: +1 whenever a
         # type key is first inserted, so it always equals the map's key
         # cardinality.
+        # "agg_v2": the state gained ntypes after "agg" held (n, vsum_us)
+        # only. A new name makes a checkpoint written before the change
+        # fail cleanly instead of misreading its 2-field rows.
         self._agg = handle.getValueState(
-            "agg", "n BIGINT, vsum_us BIGINT, ntypes BIGINT"
+            "agg_v2", "n BIGINT, vsum_us BIGINT, ntypes BIGINT"
         )
         self._types = handle.getMapState("type_counts", "t STRING", "c BIGINT")
 

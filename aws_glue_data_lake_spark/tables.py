@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, LongType, TimestampNTZType, TimestampType
 
+from aws_glue_data_lake_spark.session import session_memo
+
 #: Driver-fixture tables (TESTDATA.md) — one parquet file per table.
 TABLES: tuple[str, ...] = (
     "region",
@@ -32,14 +34,7 @@ TABLES: tuple[str, ...] = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-#: (applicationId, sf_dir, name, merge_schema) -> DataFrame. A DataFrame
-#: is an immutable logical plan, so handing the same one to every caller
-#: is free sharing: building a fresh one costs a schema-inference/footer
-#: job (~0.05-0.4 s) that nearly every registered query repaid per table
-#: reference. No data is cached — each action still scans the parquet.
-_LOAD_MEMO: dict[tuple[str, str, str, bool], DataFrame] = {}
-
-
+@session_memo
 def load_table(
     spark: SparkSession,
     sf_dir: str,
@@ -47,24 +42,24 @@ def load_table(
     merge_schema: bool = False,
 ) -> DataFrame:
     """Scan one fixture table. ``merge_schema`` union-widens schemas across
-    files, matching the reference's ``{"mergeSchema": "true"}`` read option."""
+    files, matching the reference's ``{"mergeSchema": "true"}`` read option.
+
+    Memoized per session: a DataFrame is an immutable logical plan, so
+    handing the same one to every caller is free sharing, while building a
+    fresh one costs a schema-inference/footer job (~0.05-0.4 s) that nearly
+    every registered query repaid per table reference. No data is cached —
+    each action still scans the parquet."""
     # If a producer wrote event time as parquet TIMESTAMP(NANOS), Spark
     # rejects the file unless nanos are read as int64 — keep the escape
     # hatch on (harmless for µs files). Set here (not only in our session
     # factory) so driver-provided sessions work too. Consumers must NOT
     # assume which physical type they got: normalize via ts_us_col, which
     # dispatches on the dtype actually read.
-    key = (spark.sparkContext.applicationId, sf_dir, name, merge_schema)
-    memo = _LOAD_MEMO.get(key)
-    if memo is not None:
-        return memo
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    _LOAD_MEMO[key] = df
-    return df
+    return reader.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def ts_us_col(df: DataFrame, name: str = "ts") -> Column:

@@ -421,6 +421,24 @@ def test_iceberg_threaded_mergers_all_land(spark, tmp_path):
     assert seqs == sorted(seqs) and len(set(seqs)) == len(seqs) == 4
 
 
+def test_iceberg_stale_version_hint_reads_and_commits_at_tip(spark, tmp_path):
+    """version-hint.text trails the tip when a writer stalls between
+    publishing vN.metadata.json and rewriting the hint, or when two
+    writers rewrite it out of order: readers and the next writer must
+    still resolve the tip (the threaded mergers above lost a merge, or
+    read an empty hint, this way)."""
+    path = str(tmp_path / "t")
+    IcebergTableWriter(path).create(_df(spark, 0, 4, "base"))
+    IcebergTableWriter(path).append(_df(spark, 10, 13, "second"))
+    with open(os.path.join(path, "metadata", "version-hint.text"), "w") as f:
+        f.write("1")
+    assert IcebergTableReader(path).to_df(spark).count() == 7
+    IcebergTableWriter(path).merge(_df(spark, 20, 22, "third"), keys=["k"])
+    assert IcebergTableReader(path).to_df(spark).count() == 9
+    assert not [n for n in os.listdir(os.path.join(path, "metadata"))
+                if n.endswith(".tmp")]
+
+
 def test_iceberg_overwrite_partition_rebases_when_disjoint(spark, tmp_path):
     """overwrite_partition validates the winners against the replaced
     partition's live-file set: a winner writing OTHER partitions is
@@ -839,6 +857,44 @@ def test_run_jobs_propagates_exception_after_all_finish(spark):
     # the sibling thunk ran to completion (its staged side effects are
     # in a unique dir the failed commit never consumes)
     assert done["other"]
+
+
+def test_run_jobs_no_thunks_is_empty():
+    from aws_glue_data_lake_spark.concurrency import run_jobs
+
+    assert run_jobs() == []
+
+
+def test_run_jobs_tag_propagation_failure_raises(spark, monkeypatch):
+    from aws_glue_data_lake_spark import concurrency
+
+    def broken(session):
+        raise RuntimeError("cannot wrap for tag propagation")
+
+    monkeypatch.setattr(concurrency, "inheritable_thread_target", broken)
+    ran = []
+    with pytest.raises(RuntimeError, match="tag propagation"):
+        concurrency.run_jobs(lambda: ran.append(1), lambda: ran.append(2))
+    assert ran == []  # nothing ran untagged
+
+
+def test_run_jobs_nested_keeps_session_tags(spark):
+    import warnings
+
+    from aws_glue_data_lake_spark.concurrency import run_jobs
+
+    def inner():
+        return run_jobs(spark.getTags, spark.getTags)
+
+    spark.addTag("outer-caller")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            nested = run_jobs(inner, inner)
+    finally:
+        spark.removeTag("outer-caller")
+    assert all("outer-caller" in tags for pair in nested for tags in pair)
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
 
 
 def test_delta_merge_cdf_staged_concurrently_matches_content(

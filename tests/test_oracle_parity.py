@@ -33,12 +33,9 @@ def test_no_rows_only_queries():
 def test_registry_order_drains_driver_backlog():
     """The driver checks only ~50 queries per round, in registry order —
     so the order IS the drain policy (VERDICT r6 item 1): queries with no
-    driver-green row ever come first, NEW registrations (_DEFER_NEW) come
-    after that backlog but before any green query, and green queries
-    rotate oldest-green-first. A new registration missing from _DEFER_NEW
-    would silently steal a backlog slot; this pins the tiers."""
+    driver-green row ever come first, and green queries rotate
+    oldest-green-first. This pins the tiers."""
     from aws_glue_data_lake_spark.queries import (
-        _DEFER_NEW,
         _green_round_by_query,
         all_queries,
     )
@@ -47,12 +44,9 @@ def test_registry_order_drains_driver_backlog():
     if not green:
         pytest.skip("no CORRECTNESS history on disk")
     names = list(all_queries())
-    assert _DEFER_NEW <= set(names)
 
     def tier(n):
-        if n in green:
-            return 2
-        return 1 if n in _DEFER_NEW else 0
+        return 1 if n in green else 0
 
     tiers = [tier(n) for n in names]
     assert tiers == sorted(tiers), (
