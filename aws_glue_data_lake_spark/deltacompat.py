@@ -1974,9 +1974,10 @@ def _coerce_pv(raw: str, like):
         return None
 
 
-def _key_range_overlaps(st: dict | None, keys, bounds, pv=None) -> bool:
-    """Can a file hold a row whose key tuple falls inside the batch
-    ``bounds``? Each key checks the file's ``partitionValues`` (exact:
+def _key_range_overlaps(st: dict | None, keys, ranges, pv=None) -> bool:
+    """Can a file hold a row whose key tuple falls inside the batch's
+    per-key ``ranges`` (``(lo, hi)`` pairs aligned with ``keys``)? Each
+    key checks the file's ``partitionValues`` (exact:
     min == max == the value; a NULL partition value can never
     equi-match, so the file is provably disjoint) or, failing that, its
     data-skipping stats [min,max]. True unless some key is provably
@@ -1986,8 +1987,7 @@ def _key_range_overlaps(st: dict | None, keys, bounds, pv=None) -> bool:
     candidate-file pruning and its commit-time conflict check (the same
     predicate applied to a concurrent winner's add action)."""
     pv = pv or {}
-    for i, k in enumerate(keys):
-        lo, hi = bounds[f"__lo_{i}"], bounds[f"__hi_{i}"]
+    for k, (lo, hi) in zip(keys, ranges):
         if lo is None or hi is None:
             continue
         if k in pv:
@@ -4750,6 +4750,7 @@ class DeltaTableWriter:
         not_matched_condition: str | None = None,
         not_matched_set: dict | None = None,
         not_matched_clauses: Sequence | None = None,
+        key_bounds: dict | None = None,
     ) -> int:
         """MERGE — the reference's central operation (reference
         delta/delta_tables.py:159-160 ``.merge(src, cond)
@@ -4800,7 +4801,10 @@ class DeltaTableWriter:
         holding an eligible row; conflict detection then uses
         whole-table read semantics, also matching delta-spark.
         Rewriting a touched file folds its deletion vector away; the
-        orphaned DV bin is vacuumable.
+        orphaned DV bin is vacuumable. ``key_bounds`` (``{key: (lo,
+        hi)}`` of a NON-EMPTY batch over ``source`` ∪ ``delete_keys``,
+        as ``operators.mergeclauses.key_bounds`` returns them) skips
+        the count-and-bounds aggregate this method otherwise runs.
         """
         if not_matched_by_source not in (None, "delete", "update"):
             raise ValueError(
@@ -4910,22 +4914,25 @@ class DeltaTableWriter:
         kill = source.select(*keys)
         if delete_keys is not None:
             kill = kill.unionByName(delete_keys.select(*keys))
-        kill = kill.dropDuplicates(keys)
         has_nmbs = (
             not_matched_by_source is not None
             or not_matched_by_source_clauses is not None
         )
         # ONE tiny agg → batch emptiness AND the batch's key-range
-        # (kill is empty iff source and delete_keys both are; the two
-        # isEmpty probes this folds were separate jobs). Files outside
-        # the range can't hold a matching row (min/max ignore NULL keys,
-        # and NULL keys never equi-match, so range pruning stays sound).
-        bounds = kill.agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[F.min(k).alias(f"__lo_{i}") for i, k in enumerate(keys)],
-            *[F.max(k).alias(f"__hi_{i}") for i, k in enumerate(keys)],
-        ).collect()[0]
-        batch_empty = bounds["__n"] == 0
+        # (kill is empty iff source and delete_keys both are), unless
+        # the caller already holds the bounds of its non-empty batch.
+        # Files outside the range can't hold a matching row.
+        if key_bounds is None:
+            from aws_glue_data_lake_spark.operators import (
+                mergeclauses as _mcb,
+            )
+
+            n_kill, key_bounds = _mcb.key_bounds(kill, keys)
+            batch_empty = n_kill == 0
+        else:
+            batch_empty = False
+        bounds = [key_bounds[k] for k in keys]
+        kill = kill.dropDuplicates(keys)
         if batch_empty and not has_nmbs:
             return snap.version  # no-op
 

@@ -623,6 +623,7 @@ class LakeTable:
         not_matched_condition: str | None = None,
         not_matched_set: dict | None = None,
         not_matched_clauses: Sequence | None = None,
+        key_bounds: dict | None = None,
     ) -> Snapshot:
         """Row-level MERGE, copy-on-write at file granularity.
 
@@ -647,6 +648,10 @@ class LakeTable:
         Only files whose footer key-range overlaps the batch's key-range
         are rewritten; the rest are carried by reference. The scan of
         affected files + the batch is the entire I/O bill.
+        ``key_bounds`` (``{key: (lo, hi)}`` over the upsert and delete
+        keys, as ``operators.mergeclauses.key_bounds`` returns them)
+        skips the bounds aggregate this method otherwise runs on the
+        batch.
         """
         prev = self.snapshot()
         schema = prev.schema
@@ -735,9 +740,16 @@ class LakeTable:
         kill = upserts.select(*keys)
         if delete_keys is not None:
             kill = kill.unionByName(delete_keys.select(*keys))
-        kill = kill.dropDuplicates(list(keys))
+        if key_bounds is None:
+            from aws_glue_data_lake_spark.operators import (
+                mergeclauses as _mcb,
+            )
 
-        affected, untouched = self._split_by_key_range(prev, kill, keys)
+            _n, key_bounds = _mcb.key_bounds(kill, keys)
+        kill = kill.dropDuplicates(list(keys))
+        affected, untouched = self._split_by_key_range(
+            prev, key_bounds, keys
+        )
         if not_matched_by_source not in (None, "delete", "update"):
             raise ValueError(
                 "not_matched_by_source must be None, 'delete' or "
@@ -949,8 +961,12 @@ class LakeTable:
         if bad:
             raise ValueError(f"cannot update merge key columns: {sorted(bad)}")
 
-        keyset = source.select(*keys).dropDuplicates(list(keys))
-        affected, untouched = self._split_by_key_range(prev, keyset, keys)
+        from aws_glue_data_lake_spark.operators.mergeclauses import (
+            key_bounds,
+        )
+
+        _n, bounds = key_bounds(source, keys)
+        affected, untouched = self._split_by_key_range(prev, bounds, keys)
         stat_cols = sorted({*keys, *self._stat_cols(prev)})
         st = StructType.fromDDL(prev.schema)
 
@@ -1830,23 +1846,19 @@ class LakeTable:
         return sorted(cols)
 
     def _split_by_key_range(
-        self, snap: Snapshot, kill: DataFrame, keys: Sequence[str]
+        self, snap: Snapshot, key_bounds: dict, keys: Sequence[str]
     ) -> tuple[list[dict], list[dict]]:
         """Partition the snapshot's files into (affected, untouched) by
         intersecting each file's footer min/max on the FIRST key column
-        with the batch's min/max. Files without stats are conservatively
-        affected. One tiny Spark job (2-value aggregate on the batch)."""
+        with the batch's ``key_bounds[lead]``. Files without stats are
+        conservatively affected. Runs no Spark job: the caller passes
+        the bounds (``operators.mergeclauses.key_bounds``)."""
         lead = keys[0]
-        from pyspark.sql import functions as F
-
-        row = kill.agg(
-            F.min(lead).alias("lo"), F.max(lead).alias("hi")
-        ).first()
         # Normalize through the same encoding the manifest stats use, so
         # non-JSON-native key types (timestamps → ISO strings, which order
         # lexicographically) compare against stats without type errors.
-        lo, hi = _json_safe(row["lo"]), _json_safe(row["hi"])
-        if lo is None:  # empty batch: nothing can match
+        lo, hi = (_json_safe(v) for v in key_bounds[lead])
+        if lo is None:  # no non-NULL key: nothing can match
             return [], list(snap.files)
         affected, untouched = [], []
         for f in snap.files:

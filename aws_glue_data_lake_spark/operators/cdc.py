@@ -38,9 +38,14 @@ Edge semantics preserved (judge-visible, SURVEY.md §2.4):
 Scale notes (100 TB): the watermark predicate is a plain ``>`` comparison
 on the scan column, so it pushes down to Parquet row-group stats; the
 dedup window shuffles once, hash-partitioned by pk; the anti-join reuses
-the batch's key projection (broadcast under AQE when small). The batch is
-cached across the emptiness probe / anti-join / union — the reference
-recomputes it three times (SURVEY.md §3, "no cache() anywhere").
+the batch's key projection (broadcast under AQE when small). In
+``merge_cdc_batch`` the deduplicated batch is staged once (a local
+checkpoint); one aggregate over it yields emptiness and the key bounds
+the writers prune files with, and the delete keys, the upserts and the
+writer's rewrite all read the staged rows — the reference recomputes its
+batch for every action (SURVEY.md §3, "no cache() anywhere"). Pruning is
+by key range: a single key outside every file's range (the DMS delete of
+a key that never existed) makes every file overlap the batch.
 """
 
 from __future__ import annotations
@@ -50,6 +55,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from aws_glue_data_lake_spark.operators.mergeclauses import key_bounds
 
 #: The reference's full-load sentinel watermark (icberg/iceberg_tables.py:34,103).
 FULL_LOAD_SENTINEL = "1900-01-01 00:00:00"
@@ -200,16 +207,25 @@ def merge_cdc_batch(
     tiebreakers: Sequence[str] = (),
     sentinel: object = None,
 ) -> CDCResult:
-    """One CDC micro-batch into a versioned ``lake.LakeTable``.
+    """One CDC micro-batch into a versioned ``lake.LakeTable`` (or a
+    ``targets.DeltaTarget`` / ``targets.IcebergTarget``).
 
     First batch: reference full load → CTAS snapshot v1 with footer stats
     on the merge keys + event-time column. Steady state: watermark from
     MANIFEST stats (``stat_max`` — zero Spark jobs, vs the reference's
-    full-column MAX scan, icberg/iceberg_tables.py:131), then the 4-stage
-    merge with the delete∪insert phases delegated to ``LakeTable.upsert``,
-    which rewrites only the data files whose key range overlaps the batch.
-    Per-batch I/O: O(batch + affected files); the reference's plain-parquet
-    fallback (and round 1 of this repo) rewrote the whole target.
+    full-column MAX scan, icberg/iceberg_tables.py:131), then the
+    watermark filter and latest-per-key dedup, staged ONCE as a local
+    checkpoint. One aggregate over the staged batch materializes it and
+    returns its row count (0 → no commit) and every key's min/max, which
+    go to ``table.upsert(..., key_bounds=...)`` so the writer runs no
+    bounds query of its own. The delete∪insert phases are the writer's:
+    copy-on-write on lake and Delta, rewriting only the data files whose
+    key range overlaps the batch's; merge-on-read on Iceberg.
+
+    Per-batch I/O is O(batch + affected files), but "affected" is by
+    min/max range: ONE key outside every file's range — a DMS delete of a
+    key that never existed, below every file — widens the batch's range
+    over every file, and the copy-on-write formats then rewrite them all.
     """
     if not table.exists():
         result = full_load(batch, keys, date_col, tiebreakers, sentinel=sentinel)
@@ -222,17 +238,36 @@ def merge_cdc_batch(
         watermark = (
             table.read(batch.sparkSession).agg(F.max(date_col)).first()[0]
         )
-    fresh = batch.where(F.col(date_col) > F.lit(watermark)).cache()
+    fresh = batch.where(F.col(date_col) > F.lit(watermark))
+    # Stage the deduplicated batch ONCE: the dedup window's shuffle runs
+    # a single time and every later consumer (bounds, delete keys,
+    # upserts, the writer's anti-join and rewrite) reads the staged
+    # blocks. A lost executor fails the merge before its commit, and the
+    # put-if-absent commit makes a retry safe, so a local checkpoint
+    # (no reliable copy) is enough.
+    staged = latest_per_key(
+        fresh, keys, date_col, tiebreakers
+    ).localCheckpoint(eager=False)
     try:
-        if fresh.isEmpty():
+        # one aggregate materializes the staged batch and yields its
+        # emptiness and the key bounds every writer prunes files with
+        n, bounds = key_bounds(staged, keys)
+        if n == 0:
             return CDCResult(table=None, applied=False, watermark=watermark)
-        deduped = latest_per_key(fresh, keys, date_col, tiebreakers)
-        kill = deduped.select(*keys).dropDuplicates(list(keys))
-        upserts = _clean(remove_deletes(deduped))
-        table.upsert(upserts, keys, delete_keys=kill)
+        # row_number() <= 1 already leaves one row per key
+        kill = staged.select(*keys)
+        upserts = _clean(remove_deletes(staged))
+        table.upsert(upserts, keys, delete_keys=kill, key_bounds=bounds)
         return CDCResult(table=None, applied=True, watermark=watermark)
     finally:
-        fresh.unpersist()
+        _release(staged)
+
+
+def _release(staged: DataFrame) -> None:
+    """Drop a local checkpoint's blocks now instead of at the driver's
+    next GC: the checkpointed RDD is the ``LogicalRDD`` the staged
+    frame's plan is built on."""
+    staged._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def snapshot_diff(

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: stamped by :func:`action_col`; consumed by out_value / delete filter
@@ -399,3 +399,26 @@ def updated_flag(clauses: Sequence[tuple]) -> Column:
 def deleted_flag(clauses: Sequence[tuple]) -> Column:
     idx = delete_indices(clauses)
     return F.col(ACTION).isin(idx) if idx else F.lit(False)
+
+
+def key_bounds(
+    df: DataFrame, keys: Sequence[str]
+) -> tuple[int, dict[str, tuple]]:
+    """ONE aggregate over a merge batch: its row count and each key's
+    ``(min, max)`` — what the writers' file pruning needs (lake prunes
+    on the lead key, Delta on every key, Iceberg's clause mode scans
+    with them as a stats filter). min/max ignore NULL keys and NULL
+    keys never equi-match, so pruning on these bounds stays sound; a
+    batch of only NULL keys has ``(None, None)`` bounds, which prune
+    nothing. Writers call this only when the caller passed no
+    ``key_bounds`` (``operators.cdc.merge_cdc_batch`` computes them on
+    its staged batch, in the same job that materializes it)."""
+    keys = list(keys)
+    row = df.agg(
+        F.count(F.lit(1)).alias("__n"),
+        *[F.min(k).alias(f"__lo_{i}") for i, k in enumerate(keys)],
+        *[F.max(k).alias(f"__hi_{i}") for i, k in enumerate(keys)],
+    ).first()
+    return row["__n"], {
+        k: (row[f"__lo_{i}"], row[f"__hi_{i}"]) for i, k in enumerate(keys)
+    }

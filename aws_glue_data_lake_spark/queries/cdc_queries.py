@@ -4156,7 +4156,9 @@ allrows AS (SELECT * FROM t0 UNION ALL SELECT * FROM appended)
 SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
        CAST(SUM(n) AS BIGINT) AS sum_n,
        CAST(MAX(n) AS BIGINT) AS max_n,
-       CAST(SUM(x) AS DOUBLE) AS sum_x,
+       CAST(SUM(CASE WHEN x = 1e40 THEN 1 ELSE 0 END) AS BIGINT) AS n_x_big,
+       CAST(SUM(CASE WHEN x <> 1e40 THEN CAST(x AS DECIMAL(18,2)) END)
+            AS DOUBLE) AS sum_x_rest,
        CAST(MIN(k) AS BIGINT) AS min_k,
        CAST(MAX(k) AS BIGINT) AS max_k
 FROM allrows
@@ -4204,7 +4206,18 @@ def lake_sql_type_widening_state(
             F.count("*").cast("bigint").alias("n_rows"),
             F.sum("n").cast("bigint").alias("sum_n"),
             F.max("n").cast("bigint").alias("max_n"),
-            F.sum("x").cast("double").alias("sum_x"),
+            # order-independent: a double sum of 1e40 with small values
+            # depends on summation order. Each x is a float widened to
+            # double, within 5e-4 of its 2-decimal source value, so the
+            # DECIMAL(18,2) cast recovers that value exactly (no ties)
+            F.count(F.when(F.col("x") == 1e40, 1))
+            .cast("bigint")
+            .alias("n_x_big"),
+            F.sum(
+                F.when(F.col("x") != 1e40, F.col("x").cast("decimal(18,2)"))
+            )
+            .cast("double")
+            .alias("sum_x_rest"),
             F.min("k").cast("bigint").alias("min_k"),
             F.max("k").cast("bigint").alias("max_k"),
         )

@@ -6,8 +6,10 @@ MERGE'd into a Delta table (reference delta/delta_tables.py:159-160)
 or an Iceberg catalog table (reference icberg/iceberg_tables.py:143-146).
 ``operators.cdc.merge_cdc_batch`` is already target-agnostic: it needs
 only ``exists() / create(df, stat_cols) / stat_max(col) / read(spark) /
-upsert(upserts, keys, delete_keys)``. These adapters speak that
-protocol over the jar-free format-compat writers, so
+upsert(upserts, keys, delete_keys, key_bounds)``, where ``key_bounds``
+is ``{key: (lo, hi)}`` of the staged batch, computed once by the
+operator so no writer runs its own bounds query. These adapters speak
+that protocol over the jar-free format-compat writers, so
 ``scripts/run_cdc_job.py --format delta|iceberg`` lands commits any
 foreign Delta/Iceberg reader can consume.
 
@@ -83,9 +85,11 @@ class DeltaTarget:
         upserts: DataFrame,
         keys: Sequence[str],
         delete_keys: DataFrame | None = None,
+        key_bounds: dict | None = None,
     ) -> int:
         return self._writer.merge(
-            self._spark, upserts, keys, delete_keys=delete_keys
+            self._spark, upserts, keys, delete_keys=delete_keys,
+            key_bounds=key_bounds,
         )
 
 
@@ -134,5 +138,8 @@ class IcebergTarget:
         upserts: DataFrame,
         keys: Sequence[str],
         delete_keys: DataFrame | None = None,
+        key_bounds: dict | None = None,
     ) -> int:
-        return self._writer.merge(upserts, keys, delete_keys=delete_keys)
+        return self._writer.merge(
+            upserts, keys, delete_keys=delete_keys, key_bounds=key_bounds
+        )

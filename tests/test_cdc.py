@@ -428,3 +428,211 @@ class TestFormatCompatTargets:
         assert wm is not None
         s = wm if isinstance(wm, str) else wm.isoformat()
         assert s.startswith("2024-01-01T12:00:00")
+
+
+class TestStagedBatchBounds:
+    """``merge_cdc_batch`` stages the deduplicated batch once and hands
+    its key bounds to the writers (``key_bounds=``): the bounds must
+    prune exactly the files each writer's own bounds query prunes, an
+    emptied batch must commit nothing, and one steady-state merge must
+    stay within its Spark job budget."""
+
+    KEYS = ["k1", "k2"]
+
+    def _base(self, spark):
+        from pyspark.sql import functions as F
+
+        return spark.range(400).select(
+            (F.col("id") + 100).alias("k1"),
+            (F.col("id") % 3).alias("k2"),  # k2 = (k1 - 100) % 3
+            F.lit("base").alias("v"),
+        ).repartitionByRange(4, "k1")
+
+    def _writer(self, fmt, spark, path):
+        from aws_glue_data_lake_spark.lake import LakeTable
+        from aws_glue_data_lake_spark.targets import DeltaTarget
+
+        return LakeTable(path) if fmt == "lake" else DeltaTarget(path, spark)
+
+    @staticmethod
+    def _files(fmt, w):
+        """Every live data file -> its key-range label (min k1, min k2),
+        which names the same file across two copies of one table."""
+        if fmt == "lake":
+            return {
+                f["path"]: tuple(
+                    (f["stats"].get(k) or [None])[0] for k in ("k1", "k2")
+                )
+                for f in w.snapshot().files
+            }
+        snap = w._reader().snapshot()
+        return {
+            p: tuple(snap.stats[p]["minValues"].get(k) for k in ("k1", "k2"))
+            for p, _pv, _dv in snap.files
+        }
+
+    @pytest.mark.parametrize("ghost", [False, True])
+    @pytest.mark.parametrize("fmt", ["lake", "delta"])
+    def test_passed_bounds_prune_like_the_writers_own(
+        self, spark, tmp_path, fmt, ghost
+    ):
+        from aws_glue_data_lake_spark.operators.mergeclauses import (
+            key_bounds,
+        )
+
+        schema = "k1 long, k2 long, v string"
+        upserts = spark.createDataFrame(
+            [(450, 2, "upd"), (451, 7, "new"), (None, 0, "nullkey")],
+            schema,
+        )
+        dels = [(460, 0)] + ([(-1, -1)] if ghost else [])
+        delete_keys = upserts.select(*self.KEYS).unionByName(
+            spark.createDataFrame(dels, "k1 long, k2 long")
+        )
+        n, bounds = key_bounds(delete_keys, self.KEYS)
+        assert n == 3 + len(dels)
+        assert bounds["k1"] == ((-1 if ghost else 450), 460)
+        results = {}
+        for mode in ("own", "passed"):
+            w = self._writer(fmt, spark, str(tmp_path / mode))
+            w.create(self._base(spark), stat_cols=self.KEYS)
+            before = self._files(fmt, w)
+            assert len(before) == 4
+            w.upsert(
+                upserts,
+                self.KEYS,
+                delete_keys=delete_keys,
+                key_bounds=bounds if mode == "passed" else None,
+            )
+            rows = sorted(
+                w.read(spark).collect(),
+                key=lambda r: (r["k1"] is None, r["k1"] or 0, r["k2"]),
+            )
+            after = self._files(fmt, w)
+            rewritten = {lab for p, lab in before.items() if p not in after}
+            results[mode] = (rewritten, rows)
+        rewritten, rows = results["own"]
+        assert results["passed"] == results["own"]
+        # the ghost delete key below every file widens the range over all
+        # of them; without it only the file holding keys 450..460 moves
+        assert len(rewritten) == (4 if ghost else 1)
+        got = {(r["k1"], r["k2"]): r["v"] for r in rows}
+        assert got[(450, 2)] == "upd" and got[(451, 7)] == "new"
+        assert got[(None, 0)] == "nullkey" and (460, 0) not in got
+        assert len(rows) == 400 - 1 + 2
+
+    def test_iceberg_clause_mode_accepts_bounds(self, spark, tmp_path):
+        from aws_glue_data_lake_spark.operators.mergeclauses import (
+            key_bounds,
+        )
+        from aws_glue_data_lake_spark.table import open_table
+
+        src = spark.createDataFrame(
+            [(150, 2, "upd"), (151, 7, "new")], "k1 long, k2 long, v string"
+        )
+        _n, bounds = key_bounds(src, self.KEYS)
+        got = {}
+        for mode in ("own", "passed"):
+            t = open_table(str(tmp_path / mode), "iceberg")
+            t.create(self._base(spark))
+            t.upsert(
+                src,
+                self.KEYS,
+                matched_clauses=[("update", None, None)],
+                key_bounds=bounds if mode == "passed" else None,
+            )
+            got[mode] = sorted(tuple(r) for r in t.read(spark).collect())
+        assert got["passed"] == got["own"]
+        assert (150, 2, "upd") in got["own"] and len(got["own"]) == 401
+
+    @pytest.mark.parametrize("fmt", ["lake", "delta", "iceberg"])
+    def test_watermark_emptied_batch_commits_nothing(
+        self, spark, tmp_path, fmt
+    ):
+        from aws_glue_data_lake_spark.operators.cdc import merge_cdc_batch
+        from aws_glue_data_lake_spark.table import open_table
+
+        path = str(tmp_path / fmt)
+        target = self._target(fmt, spark, path)
+        merge_cdc_batch(
+            target,
+            feed(spark, [(1, "I", ts("2024-01-03 10:00:00"), "v3", "p")]),
+            ["survey_details_id"],
+            "process_date",
+        )
+        tip = open_table(path, fmt).history()
+        stale = feed(spark, [(1, "U", ts("2024-01-02 10:00:00"), "old", "p")])
+        r = merge_cdc_batch(
+            target, stale, ["survey_details_id"], "process_date"
+        )
+        assert not r.applied
+        assert open_table(path, fmt).history() == tip
+        assert state(target.read(spark)) == {1: "v3"}
+
+    @staticmethod
+    def _target(fmt, spark, path):
+        from aws_glue_data_lake_spark.lake import LakeTable
+        from aws_glue_data_lake_spark.targets import (
+            DeltaTarget,
+            IcebergTarget,
+        )
+
+        if fmt == "lake":
+            return LakeTable(path)
+        cls = DeltaTarget if fmt == "delta" else IcebergTarget
+        return cls(path, spark)
+
+    #: Spark jobs of one steady-state merge on a 4-file table (test
+    #: session: 4 threads, 8 shuffle partitions). Staging runs the dedup
+    #: window once (1 job), the bounds aggregate over the staged batch
+    #: materializes it (2), and the writer's rewrite or merge-on-read
+    #: stage takes the rest. A re-added emptiness probe, a writer-side
+    #: bounds query or a second evaluation of the window goes over.
+    MERGE_JOBS = {"lake": 7, "delta": 7, "iceberg": 6}
+
+    @pytest.mark.parametrize("fmt", ["lake", "delta", "iceberg"])
+    def test_steady_state_merge_job_budget(self, spark, tmp_path, fmt):
+        import uuid
+
+        from pyspark.sql import functions as F
+
+        from aws_glue_data_lake_spark.operators.cdc import merge_cdc_batch
+
+        target = self._target(fmt, spark, str(tmp_path / fmt))
+        base = spark.range(400).select(
+            F.col("id").alias("survey_details_id"),
+            F.lit("I").alias("op"),
+            F.lit(ts("2024-01-01 00:00:00")).alias("process_date"),
+            F.lit("base").alias("payload"),
+        ).repartitionByRange(4, "survey_details_id")
+        merge_cdc_batch(target, base, ["survey_details_id"], "process_date")
+        sc = spark.sparkContext
+        counts = []
+        for day in (2, 3):
+            batch = feed(
+                spark,
+                [
+                    (5, "U", ts(f"2024-01-0{day} 00:00:00"), "a", "p"),
+                    (5, "U", ts(f"2024-01-0{day} 01:00:00"), "b", "p"),
+                    (7, "D", ts(f"2024-01-0{day} 00:00:00"), "d", "p"),
+                    (900 + day, "I", ts(f"2024-01-0{day} 00:00:00"), "n", "p"),
+                ],
+            ).drop("partition_0")
+            group = f"cdc-jobs-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "steady-state merge job count")
+            try:
+                r = merge_cdc_batch(
+                    target, batch, ["survey_details_id"], "process_date"
+                )
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert r.applied
+            counts.append(
+                len(sc.statusTracker().getJobIdsForGroup(group))
+            )
+        got = state(target.read(spark))
+        assert got[5] == "b" and 7 not in got and got[903] == "n"
+        # the second merge is the steady state (the first warms the
+        # session); both must stay within the budget
+        assert max(counts) <= self.MERGE_JOBS[fmt], counts
