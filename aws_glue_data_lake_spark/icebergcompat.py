@@ -4946,7 +4946,6 @@ class IcebergTableWriter:
         not_matched_condition: str | None = None,
         not_matched_set: dict | None = None,
         not_matched_clauses: Sequence | None = None,
-        key_bounds: dict | None = None,
     ) -> int:
         """MERGE — the reference's Iceberg write (reference
         icberg/iceberg_tables.py:143-146 ``MERGE INTO ... WHEN MATCHED
@@ -4973,11 +4972,6 @@ class IcebergTableWriter:
         rewrite; the read-side cost is one broadcast anti-join per
         equality-column set, reclaimed by :meth:`compact`. Callers
         dedupe ``source`` to one row per key (operators/cdc.py does).
-        ``key_bounds`` (``{key: (lo, hi)}`` of ``source``, as
-        ``operators.mergeclauses.key_bounds`` returns them) is used only
-        by the clause mode's stats-pruned scan, in place of its own
-        bounds aggregate; the default merge-on-read path reads no
-        target file and ignores it.
         """
         if not_matched_by_source not in (None, "delete", "update"):
             raise ValueError(
@@ -5059,10 +5053,9 @@ class IcebergTableWriter:
             # eq-delete over FIRED keys + a data file of transformed ∪
             # inserted rows; carried matched rows are simply not killed.
             spark = source.sparkSession
-            if key_bounds is None:
-                _n, key_bounds = _mcm.key_bounds(src_keys, keys)
+            _n, bounds = _mcm.key_bounds(src_keys, keys)
             scan = IcebergTableReader(self.path).to_df(
-                spark, stats_filter=key_bounds
+                spark, stats_filter=bounds
             )
             spark_st = _iceberg_type_to_spark(
                 {"type": "struct", "fields": schema_json["fields"]}

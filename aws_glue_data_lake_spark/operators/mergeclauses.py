@@ -410,7 +410,7 @@ def key_bounds(
     with them as a stats filter). min/max ignore NULL keys and NULL
     keys never equi-match, so pruning on these bounds stays sound; a
     batch of only NULL keys has ``(None, None)`` bounds, which prune
-    nothing. Writers call this only when the caller passed no
+    nothing. Lake and Delta call this only when the caller passed no
     ``key_bounds`` (``operators.cdc.merge_cdc_batch`` computes them on
     its staged batch, in the same job that materializes it)."""
     keys = list(keys)

@@ -198,7 +198,6 @@ class Table:
         not_matched_condition: str | None = None,
         not_matched_set: dict | None = None,
         not_matched_clauses: Sequence | None = None,
-        key_bounds: dict | None = None,
     ) -> None:
         """MERGE: every target row whose key appears in ``source`` is
         replaced, the rest of ``source`` inserts; ``delete_keys``-only
@@ -216,11 +215,7 @@ class Table:
         references; operators/mergeclauses.py), with
         ``not_matched_insert`` / ``not_matched_condition`` completing
         the WHEN NOT MATCHED leg's grammar — identical semantics on all
-        three layers.
-
-        ``key_bounds`` (``{key: (lo, hi)}`` of a non-empty batch,
-        ``operators.mergeclauses.key_bounds``) spares the writer its own
-        bounds aggregate for file pruning."""
+        three layers."""
         nmbs = dict(
             not_matched_by_source=not_matched_by_source,
             not_matched_by_source_condition=(
@@ -233,7 +228,6 @@ class Table:
             not_matched_condition=not_matched_condition,
             not_matched_set=not_matched_set,
             not_matched_clauses=not_matched_clauses,
-            key_bounds=key_bounds,
         )
         if self.format == "lake":
             self._lake().upsert(

@@ -8,7 +8,8 @@ or an Iceberg catalog table (reference icberg/iceberg_tables.py:143-146).
 only ``exists() / create(df, stat_cols) / stat_max(col) / read(spark) /
 upsert(upserts, keys, delete_keys, key_bounds)``, where ``key_bounds``
 is ``{key: (lo, hi)}`` of the staged batch, computed once by the
-operator so no writer runs its own bounds query. These adapters speak
+operator so the Delta writer runs no bounds query of its own (Iceberg's
+merge-on-read reads no target file and ignores it). These adapters speak
 that protocol over the jar-free format-compat writers, so
 ``scripts/run_cdc_job.py --format delta|iceberg`` lands commits any
 foreign Delta/Iceberg reader can consume.
@@ -140,6 +141,6 @@ class IcebergTarget:
         delete_keys: DataFrame | None = None,
         key_bounds: dict | None = None,
     ) -> int:
-        return self._writer.merge(
-            upserts, keys, delete_keys=delete_keys, key_bounds=key_bounds
-        )
+        # merge-on-read reads no target file, so there is nothing to
+        # prune with the bounds
+        return self._writer.merge(upserts, keys, delete_keys=delete_keys)

@@ -434,8 +434,9 @@ class TestStagedBatchBounds:
     """``merge_cdc_batch`` stages the deduplicated batch once and hands
     its key bounds to the writers (``key_bounds=``): the bounds must
     prune exactly the files each writer's own bounds query prunes, an
-    emptied batch must commit nothing, and one steady-state merge must
-    stay within its Spark job budget."""
+    emptied batch must commit nothing, the staged blocks must be
+    released, and one steady-state merge must stay within its Spark job
+    budget."""
 
     KEYS = ["k1", "k2"]
 
@@ -521,30 +522,6 @@ class TestStagedBatchBounds:
         assert got[(None, 0)] == "nullkey" and (460, 0) not in got
         assert len(rows) == 400 - 1 + 2
 
-    def test_iceberg_clause_mode_accepts_bounds(self, spark, tmp_path):
-        from aws_glue_data_lake_spark.operators.mergeclauses import (
-            key_bounds,
-        )
-        from aws_glue_data_lake_spark.table import open_table
-
-        src = spark.createDataFrame(
-            [(150, 2, "upd"), (151, 7, "new")], "k1 long, k2 long, v string"
-        )
-        _n, bounds = key_bounds(src, self.KEYS)
-        got = {}
-        for mode in ("own", "passed"):
-            t = open_table(str(tmp_path / mode), "iceberg")
-            t.create(self._base(spark))
-            t.upsert(
-                src,
-                self.KEYS,
-                matched_clauses=[("update", None, None)],
-                key_bounds=bounds if mode == "passed" else None,
-            )
-            got[mode] = sorted(tuple(r) for r in t.read(spark).collect())
-        assert got["passed"] == got["own"]
-        assert (150, 2, "upd") in got["own"] and len(got["own"]) == 401
-
     @pytest.mark.parametrize("fmt", ["lake", "delta", "iceberg"])
     def test_watermark_emptied_batch_commits_nothing(
         self, spark, tmp_path, fmt
@@ -568,6 +545,36 @@ class TestStagedBatchBounds:
         assert not r.applied
         assert open_table(path, fmt).history() == tip
         assert state(target.read(spark)) == {1: "v3"}
+
+    @pytest.mark.parametrize("fmt", ["lake", "delta", "iceberg"])
+    def test_staged_batch_released(self, spark, tmp_path, fmt):
+        """The staged batch's checkpoint blocks are dropped when the
+        merge returns, applied or not, so a long commit chain does not
+        pile them up in the block manager."""
+        from aws_glue_data_lake_spark.operators.cdc import merge_cdc_batch
+
+        def stored():
+            info = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            return {i.id() for i in info}
+
+        target = self._target(fmt, spark, str(tmp_path / fmt))
+        merge_cdc_batch(
+            target,
+            feed(spark, [(1, "I", ts("2024-01-02 10:00:00"), "v1", "p")]),
+            ["survey_details_id"],
+            "process_date",
+        )
+        held = stored()
+        for day, applied in ((3, True), (1, False)):
+            b = feed(
+                spark, [(1, "U", ts(f"2024-01-0{day} 10:00:00"), "v", "p")]
+            )
+            r = merge_cdc_batch(
+                target, b, ["survey_details_id"], "process_date"
+            )
+            assert r.applied is applied
+            assert stored() <= held
+        assert state(target.read(spark)) == {1: "v"}
 
     @staticmethod
     def _target(fmt, spark, path):
