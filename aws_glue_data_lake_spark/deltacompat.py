@@ -4932,7 +4932,8 @@ class DeltaTableWriter:
         else:
             batch_empty = False
         bounds = [key_bounds[k] for k in keys]
-        kill = kill.dropDuplicates(keys)
+        # kill feeds only left_anti joins, where repeated keys cannot
+        # change the output, so it is not de-duplicated
         if batch_empty and not has_nmbs:
             return snap.version  # no-op
 

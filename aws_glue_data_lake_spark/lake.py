@@ -746,7 +746,8 @@ class LakeTable:
             )
 
             _n, key_bounds = _mcb.key_bounds(kill, keys)
-        kill = kill.dropDuplicates(list(keys))
+        # kill feeds only left_anti joins, where repeated keys cannot
+        # change the output, so it is not de-duplicated
         affected, untouched = self._split_by_key_range(
             prev, key_bounds, keys
         )

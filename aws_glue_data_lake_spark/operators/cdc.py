@@ -39,13 +39,17 @@ Scale notes (100 TB): the watermark predicate is a plain ``>`` comparison
 on the scan column, so it pushes down to Parquet row-group stats; the
 dedup window shuffles once, hash-partitioned by pk; the anti-join reuses
 the batch's key projection (broadcast under AQE when small). In
-``merge_cdc_batch`` the deduplicated batch is staged once (a local
-checkpoint); one aggregate over it yields emptiness and the key bounds
-the writers prune files with, and the delete keys, the upserts and the
-writer's rewrite all read the staged rows — the reference recomputes its
-batch for every action (SURVEY.md §3, "no cache() anywhere"). Pruning is
-by key range: a single key outside every file's range (the DMS delete of
-a key that never existed) makes every file overlap the batch.
+``merge_cdc_batch`` the deduplicated batch is staged once (an eager local
+checkpoint) and an ``Observation`` on that same action yields its row
+count (0 = no commit) and the key bounds the writers prune files with, so
+no separate aggregate runs; the delete keys, the upserts and the writer's
+anti-join and rewrite all read the staged rows — the reference recomputes
+its batch for every action (SURVEY.md §3, "no cache() anywhere"). The
+delete-key set is not de-duplicated: ``row_number() <= 1`` already leaves
+one row per key, and repeated build-side keys cannot change a
+``left_anti`` join. Pruning is by key range: a single key outside every
+file's range (the DMS delete of a key that never existed) makes every
+file overlap the batch.
 """
 
 from __future__ import annotations
@@ -53,10 +57,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from aws_glue_data_lake_spark.operators.mergeclauses import key_bounds
+from aws_glue_data_lake_spark.operators.mergeclauses import (
+    bounds_columns,
+    read_bounds,
+)
 
 #: The reference's full-load sentinel watermark (icberg/iceberg_tables.py:34,103).
 FULL_LOAD_SENTINEL = "1900-01-01 00:00:00"
@@ -167,7 +174,6 @@ def incremental_merge(
     keys: Sequence[str],
     date_col: str,
     tiebreakers: Sequence[str] = (),
-    cache_batch: bool = True,
 ) -> CDCResult:
     """Steady-state upsert (icberg/iceberg_tables.py:115-153).
 
@@ -177,22 +183,21 @@ def incremental_merge(
     Late data (date <= watermark) is dropped by construction.
     """
     watermark = target.agg(F.max(date_col).alias("wm")).first()[0]
-    fresh = batch.where(F.col(date_col) > F.lit(watermark))
-    if cache_batch:
-        # One batch feeds the emptiness probe, the anti-join, and the union;
-        # the reference recomputes it for each action (SURVEY.md §3).
-        fresh = fresh.cache()
+    # One batch feeds the emptiness probe, the anti-join, and the union;
+    # the reference recomputes it for each action (SURVEY.md §3). A local
+    # checkpoint, unlike cache(), registers nothing with the session's
+    # cache manager: ContextCleaner frees its blocks once the returned
+    # table is dropped.
+    fresh = batch.where(F.col(date_col) > F.lit(watermark)).localCheckpoint()
     if fresh.isEmpty():
-        if cache_batch:
-            fresh.unpersist()
         return CDCResult(table=target, applied=False, watermark=watermark)
 
     deduped = latest_per_key(fresh, keys, date_col, tiebreakers)
     # Delete phase: MERGE ... WHEN MATCHED THEN DELETE ≡ anti-join on the
     # batch's key set. Every matched target row goes, including keys whose
-    # latest op is D (icberg/iceberg_tables.py:143-146).
-    survivors_keys = deduped.select(*keys).dropDuplicates(list(keys))
-    kept = target.join(survivors_keys, on=list(keys), how="left_anti")
+    # latest op is D (icberg/iceberg_tables.py:143-146). row_number() <= 1
+    # already leaves one row per key, so the key set needs no dedup.
+    kept = target.join(deduped.select(*keys), on=list(keys), how="left_anti")
     # Insert phase: drop D rows, strip helper cols, append.
     upserts = _clean(remove_deletes(deduped))
     new_target = kept.unionByName(upserts, allowMissingColumns=False)
@@ -214,11 +219,12 @@ def merge_cdc_batch(
     on the merge keys + event-time column. Steady state: watermark from
     MANIFEST stats (``stat_max`` — zero Spark jobs, vs the reference's
     full-column MAX scan, icberg/iceberg_tables.py:131), then the
-    watermark filter and latest-per-key dedup, staged ONCE as a local
-    checkpoint. One aggregate over the staged batch materializes it and
-    returns its row count (0 → no commit) and every key's min/max, which
-    go to ``table.upsert(..., key_bounds=...)`` so the writer runs no
-    bounds query of its own. The delete∪insert phases are the writer's:
+    watermark filter and latest-per-key dedup, staged ONCE as an eager
+    local checkpoint. An ``Observation`` on that staging action returns
+    the batch's row count (0 → no commit) and every key's min/max
+    (``mergeclauses.bounds_columns``), which go to
+    ``table.upsert(..., key_bounds=...)``, so neither the operator nor
+    the writer runs a bounds query. The delete∪insert phases are the writer's:
     copy-on-write on lake and Delta, rewriting only the data files whose
     key range overlaps the batch's; merge-on-read on Iceberg.
 
@@ -240,18 +246,15 @@ def merge_cdc_batch(
         )
     fresh = batch.where(F.col(date_col) > F.lit(watermark))
     # Stage the deduplicated batch ONCE: the dedup window's shuffle runs
-    # a single time and every later consumer (bounds, delete keys,
-    # upserts, the writer's anti-join and rewrite) reads the staged
-    # blocks. A lost executor fails the merge before its commit, and the
-    # put-if-absent commit makes a retry safe, so a local checkpoint
-    # (no reliable copy) is enough.
-    staged = latest_per_key(
-        fresh, keys, date_col, tiebreakers
-    ).localCheckpoint(eager=False)
+    # a single time and every later consumer (delete keys, upserts, the
+    # writer's anti-join and rewrite) reads the staged blocks. A lost
+    # executor fails the merge before its commit, and the put-if-absent
+    # commit makes a retry safe, so a local checkpoint (no reliable
+    # copy) is enough.
+    staged, n, bounds = stage_batch(
+        latest_per_key(fresh, keys, date_col, tiebreakers), keys
+    )
     try:
-        # one aggregate materializes the staged batch and yields its
-        # emptiness and the key bounds every writer prunes files with
-        n, bounds = key_bounds(staged, keys)
         if n == 0:
             return CDCResult(table=None, applied=False, watermark=watermark)
         # row_number() <= 1 already leaves one row per key
@@ -263,11 +266,30 @@ def merge_cdc_batch(
         _release(staged)
 
 
+def stage_batch(
+    df: DataFrame, keys: Sequence[str]
+) -> tuple[DataFrame, int, dict[str, tuple]]:
+    """``(staged, n, bounds)``: ``df`` as an eager local checkpoint, with
+    its row count and each key's ``(min, max)`` exactly as
+    ``mergeclauses.key_bounds`` gives them. The aggregate is observed on
+    the staging action itself, so it costs no job of its own; the caller
+    releases ``staged`` with :func:`_release`."""
+    obs = Observation()
+    staged = df.observe(obs, *bounds_columns(keys)).localCheckpoint(
+        eager=True
+    )
+    n, bounds = read_bounds(obs.get, keys)
+    return staged, n, bounds
+
+
 def _release(staged: DataFrame) -> None:
     """Drop a local checkpoint's blocks now instead of at the driver's
     next GC: the checkpointed RDD is the ``LogicalRDD`` the staged
-    frame's plan is built on."""
-    staged._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    frame's plan is built on. ``SparkContext.unpersistRDD`` drops the
+    same blocks as ``RDD.unpersist`` without its per-call warning that
+    a locally checkpointed RDD cannot be recomputed."""
+    rdd_id = staged._jdf.queryExecution().analyzed().rdd().id()
+    staged.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
 
 def snapshot_diff(

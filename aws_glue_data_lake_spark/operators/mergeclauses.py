@@ -401,6 +401,29 @@ def deleted_flag(clauses: Sequence[tuple]) -> Column:
     return F.col(ACTION).isin(idx) if idx else F.lit(False)
 
 
+def bounds_columns(keys: Sequence[str]) -> list[Column]:
+    """The aggregate behind :func:`key_bounds`: the batch's row count
+    and each key's min/max. ``operators.cdc.merge_cdc_batch`` hangs the
+    same expressions on its staged batch as an ``Observation``, so both
+    paths read one definition through :func:`read_bounds`."""
+    return [
+        F.count(F.lit(1)).alias("__n"),
+        *[F.min(k).alias(f"__lo_{i}") for i, k in enumerate(keys)],
+        *[F.max(k).alias(f"__hi_{i}") for i, k in enumerate(keys)],
+    ]
+
+
+def read_bounds(
+    values, keys: Sequence[str]
+) -> tuple[int, dict[str, tuple]]:
+    """``(count, {key: (min, max)})`` from one evaluation of
+    :func:`bounds_columns` (a ``Row`` or an ``Observation``'s dict)."""
+    return values["__n"], {
+        k: (values[f"__lo_{i}"], values[f"__hi_{i}"])
+        for i, k in enumerate(keys)
+    }
+
+
 def key_bounds(
     df: DataFrame, keys: Sequence[str]
 ) -> tuple[int, dict[str, tuple]]:
@@ -411,14 +434,8 @@ def key_bounds(
     keys never equi-match, so pruning on these bounds stays sound; a
     batch of only NULL keys has ``(None, None)`` bounds, which prune
     nothing. Lake and Delta call this only when the caller passed no
-    ``key_bounds`` (``operators.cdc.merge_cdc_batch`` computes them on
-    its staged batch, in the same job that materializes it)."""
+    ``key_bounds`` (``operators.cdc.merge_cdc_batch`` observes the same
+    aggregate on the action that stages its batch, so it runs no job
+    of its own there)."""
     keys = list(keys)
-    row = df.agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[F.min(k).alias(f"__lo_{i}") for i, k in enumerate(keys)],
-        *[F.max(k).alias(f"__hi_{i}") for i, k in enumerate(keys)],
-    ).first()
-    return row["__n"], {
-        k: (row[f"__lo_{i}"], row[f"__hi_{i}"]) for i, k in enumerate(keys)
-    }
+    return read_bounds(df.agg(*bounds_columns(keys)).first(), keys)

@@ -157,6 +157,33 @@ class TestIncrementalMerge:
         )
         assert state(result.table) == {3: "raw", 4: "keep"}
 
+    def test_applied_calls_pin_nothing_in_the_cache_manager(self, spark):
+        """An applied merge stages its batch as a local checkpoint, not a
+        ``cache()``: the session's cache manager gains no entry, and the
+        returned table reads no cached relation."""
+        cache_manager = spark._jsparkSession.sharedState().cacheManager()
+        was_empty = cache_manager.isEmpty()
+        for day, payload in ((5, "a"), (6, "b"), (7, "c")):
+            batch = feed(
+                spark,
+                [
+                    (1, "U", ts(f"2024-01-0{day} 10:00:00"), payload, "p"),
+                    (9, "I", ts(f"2024-01-0{day} 11:00:00"), payload, "p"),
+                ],
+            )
+            result = incremental_merge(
+                self.target(spark), batch, ["survey_details_id"],
+                "process_date",
+            )
+            assert result.applied
+            assert state(result.table) == {
+                1: payload, 3: "raw", 4: "keep", 9: payload
+            }
+            plan = result.table._jdf.queryExecution().withCachedData()
+            assert "InMemoryRelation" not in plan.toString()
+        if was_empty:  # other tests may hold cached frames of their own
+            assert cache_manager.isEmpty()
+
 
 class TestMergeCdcBatch:
     """CDC micro-batches into the versioned lake table: final state matches
@@ -522,6 +549,99 @@ class TestStagedBatchBounds:
         assert got[(None, 0)] == "nullkey" and (460, 0) not in got
         assert len(rows) == 400 - 1 + 2
 
+    @pytest.mark.parametrize("emptied", [False, True])
+    def test_observed_bounds_match_key_bounds(self, spark, emptied):
+        """``stage_batch`` observes on its staging action the count and
+        bounds ``key_bounds`` computes with an aggregate of its own,
+        including a NULL key (ignored by min/max) and a batch the
+        watermark empties (``n == 0``, ``(None, None)`` bounds)."""
+        from aws_glue_data_lake_spark.operators.cdc import (
+            _release,
+            latest_per_key,
+            stage_batch,
+        )
+        from aws_glue_data_lake_spark.operators.mergeclauses import (
+            key_bounds,
+        )
+
+        batch = spark.createDataFrame(
+            [(5, 1, 1), (5, 1, 2), (None, 4, 1), (9, None, 1), (-3, 7, 1)],
+            "k1 long, k2 long, t long",
+        ).where(F.col("t") > (10 if emptied else 0))
+        deduped = latest_per_key(batch, self.KEYS, "t")
+        staged, n, bounds = stage_batch(deduped, self.KEYS)
+        try:
+            rows = sorted(map(tuple, staged.collect()), key=str)
+        finally:
+            _release(staged)
+        assert (n, bounds) == key_bounds(deduped, self.KEYS)
+        if emptied:
+            assert (n, rows) == (0, [])
+            assert bounds == {"k1": (None, None), "k2": (None, None)}
+        else:
+            assert n == len(rows) == 4
+            assert bounds == {"k1": (-3, 9), "k2": (1, 7)}
+        assert rows == sorted(map(tuple, deduped.collect()), key=str)
+
+    @pytest.mark.parametrize("fmt", ["lake", "delta"])
+    def test_repeated_delete_keys_match_deduplicated(
+        self, spark, tmp_path, fmt
+    ):
+        """The writers anti-join the delete keys as given: keys repeated
+        within ``delete_keys`` and shared with the upserts give the same
+        rows (and on Delta the same change rows) as a de-duplicated key
+        set."""
+        from aws_glue_data_lake_spark.deltacompat import DeltaTableReader
+
+        schema = "k1 long, k2 long, v string"
+        upserts = spark.createDataFrame(
+            [(150, 2, "upd"), (600, 0, "new"), (None, 1, "nullkey")],
+            schema,
+        )
+        dels = [(150, 2), (150, 2), (200, 1), (200, 1), (600, 0), (None, 1)]
+        repeated = spark.createDataFrame(dels, "k1 long, k2 long")
+        results = {}
+        for mode in ("repeated", "distinct"):
+            path = str(tmp_path / mode)
+            w = self._writer(fmt, spark, path)
+            w.create(self._base(spark), stat_cols=self.KEYS)
+            if fmt == "delta":
+                w._writer.set_property("delta.enableChangeDataFeed", "true")
+            keys = repeated if mode == "repeated" else repeated.distinct()
+            w.upsert(upserts, self.KEYS, delete_keys=keys)
+            rows = sorted(map(tuple, w.read(spark).collect()), key=str)
+            changes = None
+            if fmt == "delta":
+                r = DeltaTableReader(path)
+                changes = sorted(
+                    (
+                        tuple(x)
+                        for x in r.changes(
+                            spark, starting_version=r.snapshot().version
+                        )
+                        .drop("_commit_timestamp")
+                        .collect()
+                    ),
+                    key=str,
+                )
+            results[mode] = (rows, changes)
+        assert results["repeated"] == results["distinct"]
+        rows, changes = results["repeated"]
+        got = {(r[0], r[1]): r[2] for r in rows}
+        assert got[(150, 2)] == "upd" and got[(600, 0)] == "new"
+        assert got[(None, 1)] == "nullkey" and (200, 1) not in got
+        assert len(rows) == 400 - 2 + 2 + 1
+        if fmt == "delta":
+            assert sorted((c[0], c[1], c[3]) for c in changes if c[0]) == [
+                (150, 2, "update_postimage"),
+                (150, 2, "update_preimage"),
+                (200, 1, "delete"),
+                (600, 0, "insert"),
+            ]
+            assert [c for c in changes if c[0] is None] == [
+                (None, 1, "nullkey", "insert", 2)
+            ]
+
     @pytest.mark.parametrize("fmt", ["lake", "delta", "iceberg"])
     def test_watermark_emptied_batch_commits_nothing(
         self, spark, tmp_path, fmt
@@ -590,12 +710,15 @@ class TestStagedBatchBounds:
         return cls(path, spark)
 
     #: Spark jobs of one steady-state merge on a 4-file table (test
-    #: session: 4 threads, 8 shuffle partitions). Staging runs the dedup
-    #: window once (1 job), the bounds aggregate over the staged batch
-    #: materializes it (2), and the writer's rewrite or merge-on-read
-    #: stage takes the rest. A re-added emptiness probe, a writer-side
-    #: bounds query or a second evaluation of the window goes over.
-    MERGE_JOBS = {"lake": 7, "delta": 7, "iceberg": 6}
+    #: session: 4 threads, 8 shuffle partitions). Staging is 2 jobs: AQE
+    #: runs the dedup window's shuffle map stage when the checkpoint is
+    #: planned, and the eager checkpoint itself, which also yields the
+    #: observed count and key bounds. The writer's anti-join and rewrite
+    #: (lake, Delta) or merge-on-read stage (Iceberg) take the rest. A
+    #: separate bounds aggregate, a re-added emptiness probe, a
+    #: writer-side bounds query or a second evaluation of the window
+    #: goes over.
+    MERGE_JOBS = {"lake": 6, "delta": 6, "iceberg": 5}
 
     @pytest.mark.parametrize("fmt", ["lake", "delta", "iceberg"])
     def test_steady_state_merge_job_budget(self, spark, tmp_path, fmt):
