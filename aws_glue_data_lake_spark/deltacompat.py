@@ -48,6 +48,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from aws_glue_data_lake_spark.concurrency import run_jobs
 from aws_glue_data_lake_spark.localdf import local_df
+from aws_glue_data_lake_spark.operators import dml
 
 #: Reader features this implementation actually honors (protocol §
 #: "reader version 3"). Anything else in readerFeatures must hard-fail:
@@ -5442,16 +5443,7 @@ class DeltaTableWriter:
                 )
             if mc is None:
                 cdc_df = changes
-        removes = [
-            {
-                "remove": {
-                    "path": self._raw_key(snap, p),
-                    "deletionTimestamp": int(time.time() * 1000),
-                    "dataChange": True,
-                }
-            }
-            for p in affected
-        ]
+        removes = self._remove_actions(snap, affected, True)
         if cdc_df is not None:
             # overlap the two independent staging writes (guide §2.6):
             # the cdc file job and the main rewrite job each target
@@ -5512,86 +5504,139 @@ class DeltaTableWriter:
             ),
         )
 
-    def _delete_where_cow(
-        self, spark: SparkSession, snap: DeltaSnapshot, cond
-    ) -> int:
-        """DELETE as ONE copy-on-write commit (delta-spark's shape on
-        DV-disabled tables; here the UniForm path, where the Iceberg
-        view cannot express DVs): files holding a matching row are
-        found via the pushed-predicate scan, rewritten WITHOUT the
-        matching rows, and swapped remove+add in one commit — untouched
-        files carried by reference, O(matched files) data I/O. Row
-        tracking ids are preserved on the surviving rows; under CDF the
-        removed rows land in a cdc file as ``delete``."""
-        r = DeltaTableReader(self.path)
-        # DVs subtract BEFORE the probe so an already-DV-deleted row
-        # cannot force a needless rewrite of its file (no-op when the
-        # table has no DVs)
-        affected = [
-            row["__fp"]
-            for row in r._apply_dvs(
-                spark, r.to_df(spark, _expose_pos=True), snap,
-                keep_meta=True,
-            )
-            .where(cond)
-            .select(F.col("__dv_fp").alias("__fp"))
-            .distinct()
-            .collect()
-        ]
-        if not affected:
-            return snap.version
-        to_physical, part_stage = self._physical_stage_ctx(snap)
-        rtc = self._rt_preserve_ctx(snap, "delete_where (DELETE)")
-        live = (
-            r._stable_lineage_scan(
-                spark, snap, keep_paths=set(affected)
-            )
-            if rtc
-            else r.to_df(spark, _keep_paths=set(affected))
-        )
-        kept = live.where(~F.coalesce(cond, F.lit(False)))
-        if rtc:
-            kept = self._rt_materialize(kept, rtc, preserve_ver=True)
-        removes = [
+    def _remove_actions(
+        self, snap: DeltaSnapshot, paths, data_change: bool
+    ) -> list[dict]:
+        """One ``remove`` action per live file in ``paths`` (as
+        ``snap.files`` names them), each under its raw log key."""
+        now = int(time.time() * 1000)
+        return [
             {
                 "remove": {
                     "path": self._raw_key(snap, p),
-                    "deletionTimestamp": int(time.time() * 1000),
-                    "dataChange": True,
+                    "deletionTimestamp": now,
+                    "dataChange": data_change,
                 }
             }
-            for p in affected
+            for p in paths
         ]
-        # The kept-rows rewrite needs no isEmpty pre-probe: staging an
-        # empty frame writes only zero-row part files, which
-        # _stage_files already skips, so adds == [] exactly when kept
-        # is empty — one fewer driver job per DELETE. With CDF on, the
-        # cdc file and the rewrite are staged concurrently (guide
-        # §2.6): independent writes into unique _stage_* dirs, only the
-        # commit consumes the results.
+
+    def _rewrite_cow(
+        self,
+        spark: SparkSession,
+        snap: DeltaSnapshot,
+        cond,
+        operation: str,
+        assignments: dict | None = None,
+    ) -> int:
+        """UPDATE (``assignments`` given) or DELETE (none) as ONE
+        copy-on-write commit — delta-spark's shape for both; DELETE
+        takes it on UniForm tables, where the Iceberg view cannot
+        express DVs. Files holding a matching row are found by one
+        aggregation over the pushed-predicate scan (O(matched files)
+        driver rows), rewritten with the matched rows updated or
+        dropped, and swapped remove+add in one commit; untouched files
+        carry by reference. Rewriting a file folds its deletion vector
+        away. Row tracking ids are preserved; under CDF the row-level
+        delta lands in a cdc file as update_preimage/update_postimage
+        pairs or ``delete`` rows."""
+        r = DeltaTableReader(self.path)
+        # _expose_pos keeps __dv_fp attached; DVs subtract BEFORE the
+        # probe so an already-DV-deleted match cannot force a needless
+        # rewrite of its file (no-op when the table has no DVs)
+        affected = dml.affected_files(
+            r._apply_dvs(
+                spark, r.to_df(spark, _expose_pos=True), snap,
+                keep_meta=True,
+            ),
+            cond,
+            "__dv_fp",
+        )
+        if not affected:
+            return snap.version
+        to_physical, part_stage = self._physical_stage_ctx(snap)
+        rtc = self._rt_preserve_ctx(
+            snap, f"{operation.lower()}_where ({operation})"
+        )
+        live = (
+            r._stable_lineage_scan(spark, snap, keep_paths=set(affected))
+            if rtc
+            else r.to_df(spark, _keep_paths=set(affected))
+        )
+        kept, matched, updated = dml.split_rows(
+            live, cond, snap.schema, assignments
+        )
+        if assignments is not None:
+            # generatedColumns on UPDATE (delta-spark's contract): a
+            # generated column NOT explicitly assigned is recomputed
+            # from its expression (an assignment to a referenced source
+            # column must not leave the derived value stale); one
+            # explicitly assigned is validated. Dropping the
+            # non-assigned ones and re-running the shared helper gives
+            # exactly that split.
+            gen_cols = [
+                f.name
+                for f in snap.schema.fields
+                if (f.metadata or {}).get("delta.generationExpression")
+            ]
+            if gen_cols:
+                updated = self._apply_generated_columns(
+                    updated.drop(
+                        *[g for g in gen_cols if g not in assignments]
+                    ),
+                    snap,
+                )
+            self._check_constraints(updated, snap.configuration)
+        if rtc:
+            # preserve stable ids: kept rows keep (id, version); updated
+            # rows keep their id, version falls back to this commit's
+            # defaultRowCommitVersion (last-updated-here)
+            kept = self._rt_materialize(kept, rtc, preserve_ver=True)
+        out = kept
+        if assignments is not None:
+            out = kept.unionByName(
+                self._rt_materialize(updated, rtc, preserve_ver=False)
+                if rtc
+                else updated
+            )
+        # The rewrite needs no isEmpty pre-probe: staging an empty frame
+        # writes only zero-row part files, which _stage_files already
+        # skips. With CDF on, the cdc file and the rewrite are staged
+        # concurrently (guide §2.6): independent writes into unique
+        # _stage_* dirs, only the commit consumes the results.
         cdc_actions: list[dict] = []
         if self._cdf_enabled(snap.configuration):
             rt_drop = ["__rt_sid", "__rt_sver"] if rtc else []
-            changes = live.where(cond).drop(*rt_drop).withColumn(
-                "_change_type", F.lit("delete")
-            )
+            if assignments is None:
+                changes = matched.drop(*rt_drop).withColumn(
+                    "_change_type", F.lit("delete")
+                )
+            else:
+                changes = matched.drop(*rt_drop).withColumn(
+                    "_change_type", F.lit("update_preimage")
+                ).unionByName(
+                    updated.drop(*rt_drop).withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    )
+                )
             staged_cdc, adds = run_jobs(
                 lambda: self._stage_files(
                     to_physical(changes), part_stage, cdc=True
                 ),
-                lambda: self._stage_files(to_physical(kept), part_stage),
+                lambda: self._stage_files(to_physical(out), part_stage),
             )
             cdc_actions = [{"cdc": c} for c in staged_cdc]
         else:
-            adds = self._stage_files(to_physical(kept), part_stage)
-        v = snap.version + 1
+            adds = self._stage_files(to_physical(out), part_stage)
         return self._commit_read_dependent(
-            v,
-            removes + [{"add": a} for a in adds] + cdc_actions,
-            operation="DELETE",
+            snap.version + 1,
+            self._remove_actions(snap, affected, True)
+            + [{"add": a} for a in adds]
+            + cdc_actions,
+            operation=operation,
             read_files={os.path.abspath(p) for p in affected},
-            # a concurrent data add may hold rows this DELETE's
-            # arbitrary predicate would have matched: conservative abort
+            # a concurrent data add may hold rows this arbitrary
+            # predicate would have matched: conservative abort
             add_conflict=True,
         )
 
@@ -5603,31 +5648,15 @@ class DeltaTableWriter:
     ) -> int:
         """UPDATE ... SET ... WHERE ... as ONE copy-on-write commit —
         the delta-spark UPDATE shape (the sqlfront DML leg delegates
-        here). Files containing a matching row are found by a single
-        metadata-column aggregation over the pushed-predicate scan
-        (O(matched files) driver rows), rewritten with the assignments
-        applied to matching rows, and swapped via remove+add in one
-        commit; untouched files are carried by reference. Rewriting a
-        touched file folds its deletion vector away, like MERGE. Under
-        CDF the true row-level delta lands in a cdc file as
-        update_preimage/update_postimage pairs.
+        here; :meth:`_rewrite_cow` does the work).
 
         ``assignments`` maps column name -> SQL expression string or
         Column, evaluated against the matched row. Assigning to an
         unknown column fails loudly (this is UPDATE, not evolution)."""
-        r = DeltaTableReader(self.path)
-        snap = r.snapshot()
+        snap = DeltaTableReader(self.path).snapshot()
         self._require_mutable(snap, "update_where (UPDATE)")
-        cond = (
-            F.expr(condition) if isinstance(condition, str) else condition
-        )
-        known = {f.name for f in snap.schema.fields}
-        bad = [c for c in assignments if c not in known]
-        if bad:
-            raise ValueError(
-                f"UPDATE assigns to unknown column(s) {sorted(bad)}; "
-                f"table columns are {sorted(known)}"
-            )
+        cond = dml.as_column(condition)
+        dml.check_assignments(assignments, snap.schema)
         bad_ident = sorted(
             set(assignments) & set(self._identity_fields(snap))
         )
@@ -5637,110 +5666,7 @@ class DeltaTableWriter:
                 f"UPDATE on IDENTITY column(s) {bad_ident} is not "
                 "allowed"
             )
-        # matched-file discovery: predicate pushes into the scan, the
-        # agg returns |files with >=1 match| rows. _expose_pos keeps
-        # __dv_fp attached; DVs subtract before the probe so a
-        # DV-deleted match cannot over-include (= needlessly rewrite)
-        # its file — no-op on DV-less tables.
-        affected = [
-            row["__fp"]
-            for row in r._apply_dvs(
-                spark, r.to_df(spark, _expose_pos=True), snap,
-                keep_meta=True,
-            )
-            .where(cond)
-            .select(F.col("__dv_fp").alias("__fp"))
-            .distinct()
-            .collect()
-        ]
-        if not affected:
-            return snap.version
-        to_physical, part_stage = self._physical_stage_ctx(snap)
-        rtc = self._rt_preserve_ctx(snap, "update_where (UPDATE)")
-        live = (
-            r._stable_lineage_scan(spark, snap, keep_paths=set(affected))
-            if rtc
-            else r.to_df(spark, _keep_paths=set(affected))
-        )
-        matched = live.where(cond)
-        updated = matched
-        for col, expr in assignments.items():
-            val = F.expr(expr) if isinstance(expr, str) else expr
-            updated = updated.withColumn(
-                col, val.cast(snap.schema[col].dataType)
-            )
-        # generatedColumns on UPDATE (delta-spark's contract): a
-        # generated column NOT explicitly assigned is recomputed from
-        # its expression (an assignment to a referenced source column
-        # must not leave the derived value stale); one explicitly
-        # assigned is validated. Dropping the non-assigned ones and
-        # re-running the shared helper gives exactly that split.
-        gen_cols = [
-            f.name
-            for f in snap.schema.fields
-            if (f.metadata or {}).get("delta.generationExpression")
-        ]
-        if gen_cols:
-            updated = self._apply_generated_columns(
-                updated.drop(
-                    *[g for g in gen_cols if g not in assignments]
-                ),
-                snap,
-            )
-        self._check_constraints(updated, snap.configuration)
-        copied = live.where(~F.coalesce(cond, F.lit(False)))
-        if rtc:
-            # preserve stable ids: copied rows keep (id, version);
-            # updated rows keep their id, version falls back to this
-            # commit's defaultRowCommitVersion (last-updated-here)
-            copied = self._rt_materialize(copied, rtc, preserve_ver=True)
-            updated_m = self._rt_materialize(
-                updated, rtc, preserve_ver=False
-            )
-        else:
-            updated_m = updated
-        out = copied.unionByName(updated_m)
-        removes = [
-            {
-                "remove": {
-                    "path": self._raw_key(snap, p),
-                    "deletionTimestamp": int(time.time() * 1000),
-                    "dataChange": True,
-                }
-            }
-            for p in affected
-        ]
-        # cdc file ∥ rewrite staging (guide §2.6): independent writes
-        # into unique _stage_* dirs; the commit reads both results.
-        cdc_actions: list[dict] = []
-        if self._cdf_enabled(snap.configuration):
-            rt_drop = ["__rt_sid", "__rt_sver"] if rtc else []
-            changes = matched.drop(*rt_drop).withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                updated.drop(*rt_drop).withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-            )
-            staged_cdc, adds = run_jobs(
-                lambda: self._stage_files(
-                    to_physical(changes), part_stage, cdc=True
-                ),
-                lambda: self._stage_files(to_physical(out), part_stage),
-            )
-            cdc_actions = [{"cdc": c} for c in staged_cdc]
-        else:
-            adds = self._stage_files(to_physical(out), part_stage)
-        v = snap.version + 1
-        return self._commit_read_dependent(
-            v,
-            removes + [{"add": a} for a in adds] + cdc_actions,
-            operation="UPDATE",
-            read_files={os.path.abspath(p) for p in affected},
-            # any concurrent data add may hold rows this UPDATE's
-            # arbitrary predicate would have matched: conservative abort
-            add_conflict=True,
-        )
+        return self._rewrite_cow(spark, snap, cond, "UPDATE", assignments)
 
     def overwrite_partition(self, df: DataFrame, **partition: str) -> int:
         """Replace one partition's files (remove actions for the old files,
@@ -5767,17 +5693,12 @@ class DeltaTableWriter:
         part_phys = {
             phys_by_logical.get(k, k): str(v) for k, v in partition.items()
         }
-        removes = [
-            {
-                "remove": {
-                    "path": self._raw_key(snap, p),
-                    "deletionTimestamp": int(time.time() * 1000),
-                    "dataChange": True,
-                }
-            }
+        replaced = [
+            p
             for p, pv, _dv in snap.files
             if all(pv.get(k) == v for k, v in part_phys.items())
         ]
+        removes = self._remove_actions(snap, replaced, True)
         # cdc file ∥ overwrite staging (guide §2.6): independent writes
         # into unique _stage_* dirs; the commit reads both results.
         cdc_actions: list[dict] = []
@@ -5812,11 +5733,7 @@ class DeltaTableWriter:
             operation="WRITE",
             # read set = the replaced partition; a winner writing OTHER
             # partitions is disjoint and this overwrite rebases over it
-            read_files={
-                os.path.abspath(p)
-                for p, pv, _dv in snap.files
-                if all(pv.get(k) == pval for k, pval in part_phys.items())
-            },
+            read_files={os.path.abspath(p) for p in replaced},
             add_conflict=lambda a: all(
                 (a.get("partitionValues") or {}).get(k) == pval
                 for k, pval in part_phys.items()
@@ -6239,16 +6156,9 @@ class DeltaTableWriter:
         adds = self._stage_files(to_phys(df), part_stage)
         for a in adds:
             a["dataChange"] = False
-        removes = [
-            {
-                "remove": {
-                    "path": self._raw_key(snap, p),
-                    "deletionTimestamp": int(time.time() * 1000),
-                    "dataChange": False,
-                }
-            }
-            for p, _, _ in snap.files
-        ]
+        removes = self._remove_actions(
+            snap, [p for p, _, _ in snap.files], False
+        )
         v = snap.version + 1
         return self._commit_read_dependent(
             v,
@@ -6418,17 +6328,11 @@ class DeltaTableWriter:
         adds = self._stage_files(to_phys(df), part_stage)
         for a in adds:
             a["dataChange"] = False
-        removes = [
-            {
-                "remove": {
-                    "path": self._raw_key(snap, p),
-                    "deletionTimestamp": int(time.time() * 1000),
-                    "dataChange": False,
-                }
-            }
-            for p, _, _ in snap.files
-            if os.path.abspath(p) in targets
-        ]
+        removes = self._remove_actions(
+            snap,
+            [p for p, _, _ in snap.files if os.path.abspath(p) in targets],
+            False,
+        )
         return self._commit_read_dependent(
             snap.version + 1,
             removes + [{"add": a} for a in adds],
@@ -6523,8 +6427,6 @@ class DeltaTableWriter:
         compressed blobs — O(#touched files), never O(#rows).
         ``optimize()`` later folds DVs away; ``vacuum()`` collects
         orphaned DV bins."""
-        import pandas as pd
-
         from aws_glue_data_lake_spark.roaring64 import (
             deserialize_positions,
             serialize_positions,
@@ -6539,7 +6441,7 @@ class DeltaTableWriter:
         self._require_mutable(
             snap, "delete_where (DELETE)", adds_content=False
         )
-        cond = F.expr(condition) if isinstance(condition, str) else condition
+        cond = dml.as_column(condition)
         if self._iceberg_compat_enabled(snap):
             # icebergCompatV2 disallows writing deletion vectors (no
             # zero-copy representation in the Iceberg view) — whenever
@@ -6547,38 +6449,18 @@ class DeltaTableWriter:
             # maintains the uniform sync: route the DELETE through the
             # copy-on-write path, delta-spark's own behavior on
             # DV-disabled tables
-            return self._delete_where_cow(spark, snap, cond)
+            return self._rewrite_cow(spark, snap, cond, "DELETE")
         # position scan WITHOUT DV subtraction: re-matching an
         # already-deleted row is idempotent under the union below
-        matched = (
-            r._scan_with_pos(spark)
-            .where(cond)
-            .select("__dv_fp", "__dv_pos")
-        )
-
-        def pack(key, pdf):
-            return pd.DataFrame(
-                {
-                    "fp": [key[0]],
-                    "blob": [
-                        bytes(serialize_positions(pdf["__dv_pos"].tolist()))
-                    ],
-                    "card": [int(pdf["__dv_pos"].nunique())],
-                }
-            )
-
-        packed = (
-            matched.groupBy("__dv_fp")
-            .applyInPandas(pack, "fp string, blob binary, card long")
-            .collect()
+        packed = dml.pack_positions(
+            r._scan_with_pos(spark).where(cond), "__dv_fp", "__dv_pos"
         )
         if not packed:
             return snap.version  # no-op: nothing matched
         by_path = {os.path.abspath(p): (p, pv, dv) for p, pv, dv in snap.files}
         merged: list[tuple[str, dict, bytes, int]] = []
-        for row in packed:
-            p, pv, old_dv = by_path[os.path.abspath(row["fp"])]
-            positions = deserialize_positions(bytes(row["blob"]))
+        for fp, positions in packed:
+            p, pv, old_dv = by_path[os.path.abspath(fp)]
             if old_dv:
                 old = deserialize_positions(_resolve_dv_blob(old_dv, self.path))
                 new = sorted(set(positions) | set(old))
@@ -6636,19 +6518,10 @@ class DeltaTableWriter:
             }
         ]
         for (p, pv, _blob, card), (off, size) in zip(merged, spans):
-            rel = self._raw_key(snap, p)
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": int(time.time() * 1000),
-                        "dataChange": True,
-                    }
-                }
-            )
+            actions += self._remove_actions(snap, [p], True)
             prior_stats = (snap.stats or {}).get(p)
             add = {
-                "path": rel,
+                "path": self._raw_key(snap, p),
                 "partitionValues": pv,
                 "size": os.path.getsize(p),
                 "modificationTime": int(os.path.getmtime(p) * 1000),

@@ -73,6 +73,7 @@ from pyspark.sql.types import (
 from aws_glue_data_lake_spark.avrolite import read_container, write_container
 from aws_glue_data_lake_spark.concurrency import run_jobs
 from aws_glue_data_lake_spark.localdf import local_df
+from aws_glue_data_lake_spark.operators import dml
 
 
 class IcebergProtocolError(NotImplementedError):
@@ -3311,11 +3312,7 @@ class IcebergTableWriter:
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        cur = next(
-            sc
-            for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        cur = self._current_schema(prev)
         new_schema = {
             "type": "struct",
             "schema-id": max(
@@ -3382,10 +3379,7 @@ class IcebergTableWriter:
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        cur = next(
-            sc for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        cur = self._current_schema(prev)
         names = [f["name"] for f in cur["fields"]]
         if old not in names:
             raise ValueError(
@@ -3443,10 +3437,7 @@ class IcebergTableWriter:
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        cur = next(
-            sc for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        cur = self._current_schema(prev)
         new_fields = json.loads(json.dumps(cur["fields"]))
         parts = column.split(".")
         leaf = parts[-1]
@@ -3519,10 +3510,7 @@ class IcebergTableWriter:
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        cur = next(
-            sc for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        cur = self._current_schema(prev)
         src_f = next(
             (f for f in cur["fields"] if f["name"] == source), None
         )
@@ -3625,10 +3613,7 @@ class IcebergTableWriter:
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        cur = next(
-            sc for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        cur = self._current_schema(prev)
         ids = {f["name"]: f["id"] for f in cur["fields"]}
         bad = [c for c in columns if c not in ids]
         if bad:
@@ -3730,10 +3715,7 @@ class IcebergTableWriter:
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        cur = next(
-            sc for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        cur = self._current_schema(prev)
         new_schema = {
             "type": "struct",
             "schema-id": max(
@@ -3980,13 +3962,7 @@ class IcebergTableWriter:
             for p, pv, rows, size, fstats in staged
         ]
         ml_entry = self._write_manifest(entries, pcols, sid, seq, schema_json)
-        ml_path = os.path.join(
-            self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-        )
-        write_container(
-            ml_path, _MANIFEST_LIST_SCHEMA, [ml_entry],
-            metadata={"format-version": "2"},
-        )
+        ml_path = self._write_manifest_list(None, sid, [ml_entry])
         self._commit_metadata(
             None, schema_json, pcols, sid, seq, ml_path, "append",
             format_version=format_version,
@@ -4013,6 +3989,113 @@ class IcebergTableWriter:
         _, manifests, _ = read_container(cur["manifest-list"])
         return manifests
 
+    @staticmethod
+    def _current_schema(meta: dict) -> dict:
+        """The table metadata's current schema entry."""
+        return next(
+            sc
+            for sc in meta["schemas"]
+            if sc["schema-id"] == meta.get("current-schema-id", 0)
+        )
+
+    def _write_manifest_list(
+        self, base: dict | None, sid: int, manifests: list[dict]
+    ) -> str:
+        """Write snapshot ``sid``'s manifest list and return its path. The
+        list declares the format-version of ``base``, the metadata the
+        snapshot commits on (2 for a new table)."""
+        ml_path = os.path.join(
+            self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
+        )
+        write_container(
+            ml_path, _MANIFEST_LIST_SCHEMA, manifests,
+            metadata={
+                "format-version": str((base or {}).get("format-version", 2))
+            },
+        )
+        return ml_path
+
+    def _overwrite_commit(
+        self,
+        prev: dict,
+        schema_json: dict,
+        pcols: list,
+        spec_: dict,
+        staged: list,
+        removed,
+        what: str,
+        winner_check,
+    ) -> int:
+        """Commit the spec's overwrite snapshot, the one manifest rewrite
+        behind copy-on-write UPDATE and :meth:`overwrite_partition`:
+        every live data-manifest entry is re-homed into a rewritten
+        manifest, status=deleted where ``removed(entry)`` holds and
+        existing otherwise, plus one added manifest for the ``staged``
+        files. Delete manifests carry through untouched: tombstones
+        naming a removed file simply never match again (paths are
+        uuid-unique, never reused). Retried against each new tip that
+        ``winner_check`` rebases over."""
+        spec_id = spec_["spec-id"]
+        spec_fields = spec_["fields"]
+
+        def attempt(pmeta: dict) -> int:
+            sid, seq = self._next_ids(pmeta)
+            new_manifests = []
+            for mf in self._manifest_list_of(pmeta):
+                if mf.get("content", 0) == 1:
+                    new_manifests.append(mf)
+                    continue
+                _, entries, _ = read_container(mf["manifest_path"])
+                _materialize_inherited_row_ids(mf, entries)
+                rewritten = []
+                for e in entries:
+                    if e["status"] == _STATUS_DELETED:
+                        continue  # already dead in the prior snapshot
+                    e = dict(e)
+                    e["status"] = (
+                        _STATUS_DELETED if removed(e) else _STATUS_EXISTING
+                    )
+                    # Resolve sequence-number inheritance BEFORE
+                    # re-homing the entry: a null seq meant "inherit
+                    # from the SOURCE manifest"; carried into a new
+                    # manifest it would wrongly inherit the new
+                    # snapshot's seq, postdating old data.
+                    if e.get("sequence_number") is None:
+                        e["sequence_number"] = mf.get("sequence_number", 0)
+                    if e.get("file_sequence_number") is None:
+                        e["file_sequence_number"] = mf.get(
+                            "sequence_number", 0
+                        )
+                    rewritten.append(e)
+                if rewritten:
+                    new_manifests.append(
+                        self._write_manifest(
+                            rewritten, pcols, sid, seq, schema_json,
+                            spec_fields=spec_fields, spec_id=spec_id,
+                        )
+                    )
+            entries = [
+                self._entry(
+                    p, pv, rows, size, _STATUS_ADDED, sid, seq,
+                    col_stats=fstats, schema_json=schema_json,
+                )
+                for p, pv, rows, size, fstats in staged
+            ]
+            if entries:
+                new_manifests.append(
+                    self._write_manifest(
+                        entries, pcols, sid, seq, schema_json,
+                        spec_fields=spec_fields, spec_id=spec_id,
+                    )
+                )
+            ml_path = self._write_manifest_list(pmeta, sid, new_manifests)
+            self._commit_metadata(
+                pmeta, schema_json, pcols, sid, seq, ml_path, "overwrite"
+            )
+            return sid
+
+        return self._retry_read_dependent(prev, what, attempt, winner_check)
+
     def _resolve_batch_schema(
         self, df: DataFrame, prev: dict, merge_schema: bool
     ) -> tuple[dict, list | None]:
@@ -4023,11 +4106,7 @@ class IcebergTableWriter:
         fresh field ids past last-column-id joins ``schemas``; earlier
         data files read NULL for the new columns. Same-named columns
         must keep their type."""
-        schema_json = next(
-            s
-            for s in prev["schemas"]
-            if s["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        schema_json = self._current_schema(prev)
         cur_names = {f["name"] for f in schema_json["fields"]}
         new_cols = [f for f in df.schema.fields if f.name not in cur_names]
         by_name = {f["name"]: f for f in schema_json["fields"]}
@@ -4151,13 +4230,7 @@ class IcebergTableWriter:
             manifests = self._manifest_list_of(
                 prev, branch or "main"
             ) + [ml_entry]
-            ml_path = os.path.join(
-                self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-            )
-            write_container(
-                ml_path, _MANIFEST_LIST_SCHEMA, manifests,
-                metadata={"format-version": "2"},
-            )
+            ml_path = self._write_manifest_list(prev, sid, manifests)
             try:
                 self._commit_metadata(
                     prev, schema_json, pcols, sid, seq, ml_path, "append",
@@ -4186,19 +4259,9 @@ class IcebergTableWriter:
                 raise FileNotFoundError(
                     f"no Iceberg table at {self.path}"
                 )
-            schema_json = next(
-                sc
-                for sc in prev["schemas"]
-                if sc["schema-id"] == prev.get("current-schema-id", 0)
-            )
+            schema_json = self._current_schema(prev)
             sid, seq = self._next_ids(prev)
-            ml_path = os.path.join(
-                self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-            )
-            write_container(
-                ml_path, _MANIFEST_LIST_SCHEMA, [],
-                metadata={"format-version": "2"},
-            )
+            ml_path = self._write_manifest_list(prev, sid, [])
             try:
                 self._commit_metadata(
                     prev,
@@ -4237,13 +4300,8 @@ class IcebergTableWriter:
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        schema_json = next(
-            sc
-            for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        schema_json = self._current_schema(prev)
         spec_ = self._default_spec(prev)
-        spec_id = spec_["spec-id"]
         spec_fields = spec_["fields"]
         pcols, part_exprs = self._spec_partition_ctx(
             _iceberg_type_to_spark(
@@ -4302,76 +4360,6 @@ class IcebergTableWriter:
         base_live = self._live_files_in_partition(prev, part)
         staged = self._stage_data_files(df, pcols, part_exprs)
 
-        def attempt(pmeta: dict) -> int:
-            sid, seq = self._next_ids(pmeta)
-            new_manifests = []
-            for mf in self._manifest_list_of(pmeta):
-                if mf.get("content", 0) == 1:
-                    # delete manifests carry through untouched:
-                    # tombstones naming files this overwrite removes
-                    # simply never match (paths are uuid-unique, never
-                    # reused)
-                    new_manifests.append(mf)
-                    continue
-                _, entries, _ = read_container(mf["manifest_path"])
-                _materialize_inherited_row_ids(mf, entries)
-                rewritten = []
-                for e in entries:
-                    if e["status"] == _STATUS_DELETED:
-                        continue  # already dead in the prior snapshot
-                    pv = e["data_file"].get("partition", {})
-                    matches = all(
-                        pv.get(k) == v for k, v in part.items()
-                    )
-                    e = dict(e)
-                    e["status"] = (
-                        _STATUS_DELETED if matches else _STATUS_EXISTING
-                    )
-                    # Resolve sequence-number inheritance BEFORE
-                    # re-homing the entry: a null seq meant "inherit
-                    # from the SOURCE manifest"; carried into a new
-                    # manifest it would wrongly inherit the new
-                    # snapshot's seq, postdating old data.
-                    if e.get("sequence_number") is None:
-                        e["sequence_number"] = mf.get("sequence_number", 0)
-                    if e.get("file_sequence_number") is None:
-                        e["file_sequence_number"] = mf.get(
-                            "sequence_number", 0
-                        )
-                    rewritten.append(e)
-                if rewritten:
-                    new_manifests.append(
-                        self._write_manifest(
-                            rewritten, pcols, sid, seq, schema_json,
-                            spec_fields=spec_fields, spec_id=spec_id,
-                        )
-                    )
-            entries = [
-                self._entry(
-                    p, pv, rows, size, _STATUS_ADDED, sid, seq,
-                    col_stats=fstats, schema_json=schema_json,
-                )
-                for p, pv, rows, size, fstats in staged
-            ]
-            if entries:
-                new_manifests.append(
-                    self._write_manifest(
-                        entries, pcols, sid, seq, schema_json,
-                        spec_fields=spec_fields, spec_id=spec_id,
-                    )
-                )
-            ml_path = os.path.join(
-                self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-            )
-            write_container(
-                ml_path, _MANIFEST_LIST_SCHEMA, new_manifests,
-                metadata={"format-version": "2"},
-            )
-            self._commit_metadata(
-                pmeta, schema_json, pcols, sid, seq, ml_path, "overwrite"
-            )
-            return sid
-
         def winner_check(base: dict, new: dict) -> str | None:
             # read/write set = the replaced partition: rebase (re-run
             # the manifest rewrite against the new tip) when the
@@ -4383,8 +4371,13 @@ class IcebergTableWriter:
                 )
             return None
 
-        return self._retry_read_dependent(
-            prev, "overwrite_partition (WRITE)", attempt, winner_check
+        def in_partition(e: dict) -> bool:
+            pv = e["data_file"].get("partition", {})
+            return all(pv.get(k) == v for k, v in part.items())
+
+        return self._overwrite_commit(
+            prev, schema_json, pcols, spec_, staged, in_partition,
+            "overwrite_partition (WRITE)", winner_check,
         )
 
     def update_where(
@@ -4402,128 +4395,45 @@ class IcebergTableWriter:
         rewrite reads through to_df, which applies them; dangling
         tombstones for removed paths never match live rows). Works
         uniformly on v2 and v3 tables; format-version is preserved."""
-        from pyspark.sql import functions as F
-
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        schema_json = next(
-            sc
-            for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        schema_json = self._current_schema(prev)
         spec_ = self._default_spec(prev)
-        spec_id = spec_["spec-id"]
-        spec_fields = spec_["fields"]
         st = _iceberg_type_to_spark(
             {"type": "struct", "fields": schema_json["fields"]}
         )
         pcols, part_exprs = self._spec_partition_ctx(
-            st, schema_json, spec_fields
+            st, schema_json, spec_["fields"]
         )
-        known = {f.name for f in st.fields}
-        bad = [c for c in assignments if c not in known]
-        if bad:
-            raise ValueError(
-                f"UPDATE assigns to unknown column(s) {sorted(bad)}; "
-                f"table columns are {sorted(known)}"
-            )
+        dml.check_assignments(assignments, st)
         reader = IcebergTableReader(self.path)
         snap = reader.snapshot()
         if not snap.files:
             return prev["current-snapshot-id"]
-        cond = (
-            F.expr(condition) if isinstance(condition, str) else condition
-        )
+        cond = dml.as_column(condition)
         affected = {
-            os.path.abspath(row["__fp"])
-            for row in reader.to_df(spark, _with_meta=True)
-            .where(cond)
-            .select(F.col("__del_fp").alias("__fp"))
-            .distinct()
-            .collect()
+            os.path.abspath(p)
+            for p in dml.affected_files(
+                reader.to_df(spark, _with_meta=True), cond, "__del_fp"
+            )
         }
         if not affected:
             return prev["current-snapshot-id"]
-        live = reader.to_df(spark, _keep_paths=affected)
-        matched = live.where(cond)
-        updated = matched
-        type_of = {f.name: f.dataType for f in st.fields}
-        for col, expr in assignments.items():
-            val = F.expr(expr) if isinstance(expr, str) else expr
-            updated = updated.withColumn(col, val.cast(type_of[col]))
-        out = live.where(~F.coalesce(cond, F.lit(False))).unionByName(
-            updated
+        kept, _, updated = dml.split_rows(
+            reader.to_df(spark, _keep_paths=affected), cond, st, assignments
         )
-        staged = self._stage_data_files(out, pcols, part_exprs)
-        fv = str(prev.get("format-version", 2))
+        staged = self._stage_data_files(
+            kept.unionByName(updated), pcols, part_exprs
+        )
 
-        def attempt(pmeta: dict) -> int:
-            sid, seq = self._next_ids(pmeta)
-            new_manifests = []
-            for mf in self._manifest_list_of(pmeta):
-                if mf.get("content", 0) == 1:
-                    new_manifests.append(mf)  # tombstones carry through
-                    continue
-                _, entries, _ = read_container(mf["manifest_path"])
-                _materialize_inherited_row_ids(mf, entries)
-                rewritten = []
-                for e in entries:
-                    if e["status"] == _STATUS_DELETED:
-                        continue
-                    raw = e["data_file"]["file_path"]
-                    if raw.startswith("file:"):
-                        raw = _urlparse.urlparse(raw).path
-                    p = os.path.abspath(
-                        raw
-                        if os.path.isabs(raw)
-                        else os.path.join(self.path, raw)
-                    )
-                    e = dict(e)
-                    e["status"] = (
-                        _STATUS_DELETED
-                        if p in affected
-                        else _STATUS_EXISTING
-                    )
-                    if e.get("sequence_number") is None:
-                        e["sequence_number"] = mf.get("sequence_number", 0)
-                    if e.get("file_sequence_number") is None:
-                        e["file_sequence_number"] = mf.get(
-                            "sequence_number", 0
-                        )
-                    rewritten.append(e)
-                if rewritten:
-                    new_manifests.append(
-                        self._write_manifest(
-                            rewritten, pcols, sid, seq, schema_json,
-                            spec_fields=spec_fields, spec_id=spec_id,
-                        )
-                    )
-            entries = [
-                self._entry(
-                    p, pv, rows, size, _STATUS_ADDED, sid, seq,
-                    col_stats=fstats, schema_json=schema_json,
-                )
-                for p, pv, rows, size, fstats in staged
-            ]
-            if entries:
-                new_manifests.append(
-                    self._write_manifest(
-                        entries, pcols, sid, seq, schema_json,
-                        spec_fields=spec_fields, spec_id=spec_id,
-                    )
-                )
-            ml_path = os.path.join(
-                self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-            )
-            write_container(
-                ml_path, _MANIFEST_LIST_SCHEMA, new_manifests,
-                metadata={"format-version": str(fv)},
-            )
-            self._commit_metadata(
-                pmeta, schema_json, pcols, sid, seq, ml_path, "overwrite"
-            )
-            return sid
+        def in_affected(e: dict) -> bool:
+            raw = e["data_file"]["file_path"]
+            if raw.startswith("file:"):
+                raw = _urlparse.urlparse(raw).path
+            return os.path.abspath(
+                raw if os.path.isabs(raw) else os.path.join(self.path, raw)
+            ) in affected
 
         def winner_check(base: dict, new: dict) -> str | None:
             # the staged rewrite was computed against base's row state;
@@ -4540,8 +4450,9 @@ class IcebergTableWriter:
                 )
             return None
 
-        return self._retry_read_dependent(
-            prev, "update_where (UPDATE)", attempt, winner_check
+        return self._overwrite_commit(
+            prev, schema_json, pcols, spec_, staged, in_affected,
+            "update_where (UPDATE)", winner_check,
         )
 
     def delete_where(self, spark: SparkSession, condition: str) -> int:
@@ -4560,11 +4471,7 @@ class IcebergTableWriter:
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        schema_json = next(
-            sc
-            for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        schema_json = self._current_schema(prev)
         spec_ = self._default_spec(prev)
         spec_id = spec_["spec-id"]
         spec_fields = spec_["fields"]
@@ -4593,11 +4500,7 @@ class IcebergTableWriter:
         # already tombstoned (no redundant double-tombstoning)
         fresh = (
             reader.to_df(spark, _with_meta=True)
-            .where(
-                F.expr(condition)
-                if isinstance(condition, str)
-                else condition
-            )
+            .where(dml.as_column(condition))
             .select(
                 F.col("__del_fp").alias("file_path"),
                 F.col("__del_pos").cast("long").alias("pos"),
@@ -4633,13 +4536,7 @@ class IcebergTableWriter:
                     [entry], pcols, sid, seq, schema_json, content=1
                 )
             ]
-            ml_path = os.path.join(
-                self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-            )
-            write_container(
-                ml_path, _MANIFEST_LIST_SCHEMA, manifests,
-                metadata={"format-version": "2"},
-            )
+            ml_path = self._write_manifest_list(pv, sid, manifests)
             self._commit_metadata(
                 pv, schema_json, pcols, sid, seq, ml_path, "delete"
             )
@@ -4680,9 +4577,6 @@ class IcebergTableWriter:
         O(#matched rows) like the v2 position-delete path: bitmap
         packing runs per-file on executors, the driver handles only the
         compressed blobs."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-
         from aws_glue_data_lake_spark.roaring64 import (
             deserialize_positions,
             read_dv_blob,
@@ -4694,30 +4588,12 @@ class IcebergTableWriter:
         snap = reader.snapshot()
         if not snap.files:
             return prev["current-snapshot-id"]
-        cond = (
-            F.expr(condition) if isinstance(condition, str) else condition
-        )
-        matched = (
-            reader.to_df(spark, _with_meta=True)
-            .where(cond)
-            .select("__del_fp", "__del_pos")
-        )
-
-        def pack(key, pdf):
-            return pd.DataFrame(
-                {
-                    "fp": [key[0]],
-                    "blob": [
-                        bytes(serialize_positions(pdf["__del_pos"].tolist()))
-                    ],
-                    "card": [int(pdf["__del_pos"].nunique())],
-                }
-            )
-
-        packed = (
-            matched.groupBy("__del_fp")
-            .applyInPandas(pack, "fp string, blob binary, card long")
-            .collect()
+        packed = dml.pack_positions(
+            reader.to_df(spark, _with_meta=True).where(
+                dml.as_column(condition)
+            ),
+            "__del_fp",
+            "__del_pos",
         )
         if not packed:
             return prev["current-snapshot-id"]
@@ -4737,9 +4613,8 @@ class IcebergTableWriter:
         sid, seq = self._next_ids(prev)
         dvs: list[tuple[str, bytes, int]] = []
         replaced: set[str] = set()
-        for row in packed:
-            fp = os.path.abspath(row["fp"])
-            positions = deserialize_positions(bytes(row["blob"]))
+        for fp, positions in packed:
+            fp = os.path.abspath(fp)
             if fp in existing:
                 puf, off, size = existing[fp]
                 old = deserialize_positions(
@@ -4821,13 +4696,7 @@ class IcebergTableWriter:
                 content=1, v3_dv=True,
             )
         )
-        ml_path = os.path.join(
-            self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-        )
-        write_container(
-            ml_path, _MANIFEST_LIST_SCHEMA, new_manifests,
-            metadata={"format-version": "3"},
-        )
+        ml_path = self._write_manifest_list(prev, sid, new_manifests)
         self._commit_metadata_strict(
             prev, schema_json, pcols, sid, seq, ml_path, "delete"
         )
@@ -4891,13 +4760,7 @@ class IcebergTableWriter:
             for p in paths
         ]
         ml_entry = self._write_manifest(entries, [], sid, seq, schema_json)
-        ml_path = os.path.join(
-            self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-        )
-        write_container(
-            ml_path, _MANIFEST_LIST_SCHEMA, [ml_entry],
-            metadata={"format-version": "2"},
-        )
+        ml_path = self._write_manifest_list(None, sid, [ml_entry])
         self._commit_metadata(
             None, schema_json, [], sid, seq, ml_path, "append"
         )
@@ -4996,11 +4859,7 @@ class IcebergTableWriter:
         if matched_clauses is not None and not merge_schema:
             # clause mode tolerates EXTRA source columns (expression-
             # only routing columns): validate on the overlap, never land
-            cur = next(
-                s
-                for s in prev["schemas"]
-                if s["schema-id"] == prev.get("current-schema-id", 0)
-            )
+            cur = self._current_schema(prev)
             known = {f["name"] for f in cur["fields"]}
             schema_json, all_schemas = self._resolve_batch_schema(
                 source.select(
@@ -5250,13 +5109,7 @@ class IcebergTableWriter:
                         spec_fields=spec_fields, spec_id=spec_id,
                     )
                 )
-            ml_path = os.path.join(
-                self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-            )
-            write_container(
-                ml_path, _MANIFEST_LIST_SCHEMA, manifests,
-                metadata={"format-version": "2"},
-            )
+            ml_path = self._write_manifest_list(pv, sid, manifests)
             self._commit_metadata(
                 pv, schema_json, pcols, sid, seq, ml_path, "overwrite",
                 all_schemas=all_schemas,
@@ -5301,11 +5154,7 @@ class IcebergTableWriter:
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        schema_json = next(
-            sc
-            for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        schema_json = self._current_schema(prev)
         spec_ = self._default_spec(prev)
         spec_id = spec_["spec-id"]
         spec_fields = spec_["fields"]
@@ -5338,13 +5187,7 @@ class IcebergTableWriter:
                     [entry], pcols, sid, seq, schema_json, content=1
                 )
             ]
-            ml_path = os.path.join(
-                self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-            )
-            write_container(
-                ml_path, _MANIFEST_LIST_SCHEMA, manifests,
-                metadata={"format-version": "2"},
-            )
+            ml_path = self._write_manifest_list(pv, sid, manifests)
             self._commit_metadata(
                 pv, schema_json, pcols, sid, seq, ml_path, "delete",
                 branch=branch or "main",
@@ -5371,11 +5214,7 @@ class IcebergTableWriter:
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        schema_json = next(
-            sc
-            for sc in prev["schemas"]
-            if sc["schema-id"] == prev.get("current-schema-id", 0)
-        )
+        schema_json = self._current_schema(prev)
         spec_ = self._default_spec(prev)
         spec_id = spec_["spec-id"]
         spec_fields = spec_["fields"]
@@ -5430,13 +5269,7 @@ class IcebergTableWriter:
             entries, pcols, sid, seq, schema_json,
             spec_fields=spec_fields, spec_id=spec_id,
         )
-        ml_path = os.path.join(
-            self._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-        )
-        write_container(
-            ml_path, _MANIFEST_LIST_SCHEMA, [ml_entry],
-            metadata={"format-version": "2"},
-        )
+        ml_path = self._write_manifest_list(prev, sid, [ml_entry])
         self._commit_metadata_strict(
             prev, schema_json, pcols, sid, seq, ml_path, "replace"
         )
@@ -5761,11 +5594,7 @@ def export_lake_snapshot(lake_table, dest_path: str, version: int | None = None)
         for f in snap.files
     ]
     ml_entry = w._write_manifest(entries, pcols, sid, seq, schema_json)
-    ml_path = os.path.join(w._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro")
-    write_container(
-        ml_path, _MANIFEST_LIST_SCHEMA, [ml_entry],
-        metadata={"format-version": "2"},
-    )
+    ml_path = w._write_manifest_list(None, sid, [ml_entry])
     w._commit_metadata(None, schema_json, pcols, sid, seq, ml_path, "append")
     return IcebergTableReader(dest_path)
 
@@ -6191,13 +6020,7 @@ def sync_uniform(delta_path: str) -> None:
         manifests.append(
             w._write_manifest(entries, pcols, sid, seq, schema_json)
         )
-    ml_path = os.path.join(
-        w._meta_dir, f"snap-{sid}-{uuid.uuid4().hex}.avro"
-    )
-    write_container(
-        ml_path, _MANIFEST_LIST_SCHEMA, manifests,
-        metadata={"format-version": "2"},
-    )
+    ml_path = w._write_manifest_list(prev, sid, manifests)
     props = dict((prev or {}).get("properties") or {})
     props["uniform.delta-version"] = str(snap.version)
     props["schema.name-mapping.default"] = json.dumps(

@@ -1347,37 +1347,27 @@ class LakeTable:
         DV-applying read), and swapped in one commit; everything else is
         carried by reference. ``assignments`` maps column name -> SQL
         expression string or Column."""
-        from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
+
+        from aws_glue_data_lake_spark.operators import dml
 
         prev = self.snapshot()
         st = StructType.fromDDL(prev.schema)
-        known = {f.name for f in st.fields}
-        bad = [c for c in assignments if c not in known]
-        if bad:
-            raise ValueError(
-                f"UPDATE assigns to unknown column(s) {sorted(bad)}; "
-                f"table columns are {sorted(known)}"
-            )
-        cond = (
-            F.expr(condition) if isinstance(condition, str) else condition
-        )
+        dml.check_assignments(assignments, st)
+        cond = dml.as_column(condition)
         reader = spark.read.schema(st)
         if prev.partition_by:
             reader = reader.option("basePath", self._data)
         # raw scan (DVs not applied) is only used to NAME files with a
         # potential match — over-inclusion by a tombstoned row merely
         # rewrites one extra file; the rewrite itself reads DV-applied
-        matched_names = {
-            r["file_name"]
-            for r in reader.parquet(
-                *[self._abs(e["path"]) for e in prev.files]
+        matched_names = set(
+            dml.affected_files(
+                reader.parquet(*[self._abs(e["path"]) for e in prev.files]),
+                cond,
+                "_metadata.file_name",
             )
-            .where(cond)
-            .select(F.col("_metadata.file_name").alias("file_name"))
-            .distinct()
-            .collect()
-        }
+        )
         affected = [
             e
             for e in prev.files
@@ -1389,18 +1379,11 @@ class LakeTable:
         live = self._read_files(
             spark, [e["path"] for e in affected], prev
         )
-        matched = live.where(cond)
-        updated = matched
-        type_of = {f.name: f.dataType for f in st.fields}
-        for col, expr in assignments.items():
-            val = F.expr(expr) if isinstance(expr, str) else expr
-            updated = updated.withColumn(col, val.cast(type_of[col]))
+        kept, _, updated = dml.split_rows(live, cond, st, assignments)
         self._check_constraints(updated, prev)
-        out = live.where(~F.coalesce(cond, F.lit(False))).unionByName(
-            updated
-        )
         new_files = self._write_files(
-            out, self._stat_cols(prev), prev.partition_by
+            kept.unionByName(updated), self._stat_cols(prev),
+            prev.partition_by,
         )
         return self._commit(
             untouched + new_files, prev.schema, "update", prev,

@@ -4,7 +4,11 @@ The engine grew three parallel table surfaces — the homegrown
 :class:`~aws_glue_data_lake_spark.lake.LakeTable`, the jar-free Delta
 protocol layer (:mod:`~aws_glue_data_lake_spark.deltacompat`) and the
 Iceberg v2 layer (:mod:`~aws_glue_data_lake_spark.icebergcompat`) — each
-with the same capabilities under slightly different method shapes. This
+with the same capabilities under slightly different method shapes. The
+format-independent half of their row-level DML (predicate and assignment
+handling, the affected-file probe, the kept/matched/updated row split of a
+copy-on-write rewrite, deletion-vector position packing) lives once, in
+:mod:`~aws_glue_data_lake_spark.operators.dml`. This
 module is the one entry point a user needs, the way the reference's users
 reach every format through one handle (reference
 delta/delta_tables.py:87-88 ``DeltaTable.forPath(spark, path)``; reference
@@ -254,12 +258,7 @@ class Table:
         (found by a metadata-column aggregation over the
         pushed-predicate scan); the rest carry by reference.
         ``assignments`` maps column name -> SQL expression or Column."""
-        if self.format == "delta":
-            self._delta_writer().update_where(spark, condition, assignments)
-        elif self.format == "iceberg":
-            self._ice_writer().update_where(spark, condition, assignments)
-        else:
-            self._lake().update_where(spark, condition, assignments)
+        self._impl_for_write().update_where(spark, condition, assignments)
 
     def _impl_for_write(self):
         if self.format == "lake":

@@ -6,6 +6,7 @@ import pytest
 
 from aws_glue_data_lake_spark.oracle import compare_result, run_oracle
 from aws_glue_data_lake_spark.queries import all_oracles, all_queries
+from test_plan_sweep import plan_invariant_violations
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -18,6 +19,10 @@ def test_every_oracle_has_a_query():
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(name, spark, sf_dir):
     spark_df = QUERIES[name](spark, sf_dir)
+    # the registry-wide plan invariants, read before the DataFrame runs
+    # (test_no_rows_only_queries pins that every query is checked here)
+    bad_plan = plan_invariant_violations(name, spark_df)
+    assert not bad_plan, f"{name}: " + "; ".join(bad_plan)
     oracle_pdf = run_oracle(ORACLES[name], sf_dir)
     problems = compare_result(spark_df, oracle_pdf)
     assert not problems, f"{name}: " + "; ".join(problems)

@@ -1,8 +1,10 @@
-"""Registry-WIDE physical-plan sweep (VERDICT r6 item 7): instead of
-per-query pins, walk every registered query's executed plan and assert
+"""Registry-WIDE physical-plan invariants (VERDICT r6 item 7): instead
+of per-query pins, every registered query's executed plan is checked for
 the three scale invariants that individual pins used to catch one at a
 time — so the next `agg_equidepth_histogram`-class regression (a global
-window smuggled in by a new query) fails CI, not the bench.
+window smuggled in by a new query) fails CI, not the bench. The check
+runs inside ``test_oracle_parity`` (``plan_invariant_violations``), on
+the DataFrame that test already builds for every registered query.
 
 Invariants:
 (a) no CartesianProduct anywhere (broadcast-bounded scalar crosses plan
@@ -37,9 +39,6 @@ ROW_PYTHON_OK = {
     "events_udtf_polymorphic",
     "text_udtf_lateral_chunks",
 }
-
-SF_DIR = "/root/testdata/sf0.001"
-
 
 def _bracket_groups(payload: str) -> list[str]:
     """Top-level [...] groups of a plan node line ('Window [a], [b], [c]'
@@ -82,35 +81,25 @@ def _global_window_lines(plan: str) -> list[str]:
     return out
 
 
-def test_registry_wide_plan_invariants(spark):
-    from aws_glue_data_lake_spark.queries import all_queries
-
-    cartesian, global_win, row_python, errors = {}, {}, {}, {}
-    for name, fn in all_queries().items():
-        try:
-            df = fn(spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as e:  # pragma: no cover - diagnostic
-            errors[name] = repr(e)[:200]
-            continue
-        if "CartesianProduct" in plan:
-            cartesian[name] = True
-        if "BatchEvalPython" in plan and name not in ROW_PYTHON_OK:
-            row_python[name] = True
-        if name not in GLOBAL_WINDOW_OK:
-            lines = _global_window_lines(plan)
-            if lines:
-                global_win[name] = lines[0]
-
-    assert not errors, f"queries failed to plan: {errors}"
-    assert not cartesian, f"CartesianProduct in: {sorted(cartesian)}"
-    assert not row_python, (
-        f"undeclared row-at-a-time Python eval in: {sorted(row_python)}"
-    )
-    assert not global_win, (
-        "unpartitioned WindowExec outside the dimension-sized allowlist "
-        f"in: {global_win}"
-    )
+def plan_invariant_violations(name: str, df) -> list[str]:
+    """The three invariants above, checked on ``df``'s executed plan
+    without running it. ``test_oracle_parity`` calls this on every
+    registered query's DataFrame before it executes it, so the registry
+    is built once for both checks."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    problems = []
+    if "CartesianProduct" in plan:
+        problems.append("CartesianProduct in the executed plan")
+    if "BatchEvalPython" in plan and name not in ROW_PYTHON_OK:
+        problems.append("undeclared row-at-a-time Python eval")
+    if name not in GLOBAL_WINDOW_OK:
+        lines = _global_window_lines(plan)
+        if lines:
+            problems.append(
+                "unpartitioned WindowExec outside the dimension-sized "
+                f"allowlist: {lines[0]}"
+            )
+    return problems
 
 
 def test_allowlists_stay_minimal(spark):

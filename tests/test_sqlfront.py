@@ -191,40 +191,163 @@ def test_delete_statement(spark, tmp_path, fmt):
     ]
 
 
-def test_update_unknown_column_fails_loudly(spark, tmp_path):
-    path = str(tmp_path / "t")
-    open_table(path, "delta").create(_mk(spark, [(1, 1)]))
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "lake"])
+def test_update_unknown_column_fails_loudly(spark, tmp_path, fmt):
+    path = str(tmp_path / fmt)
+    open_table(path, fmt).create(_mk(spark, [(1, 1)]))
     with pytest.raises(ValueError, match="unknown column"):
-        sql(spark, f"UPDATE delta.`{path}` SET nope = 1")
+        sql(spark, f"UPDATE {fmt}.`{path}` SET nope = 1")
 
 
-def test_update_only_rewrites_matched_files(spark, tmp_path):
+def _files_by_partition(fmt, path):
+    """Every live data file -> its ``p`` partition value, as a string."""
+    if fmt == "delta":
+        from aws_glue_data_lake_spark.deltacompat import DeltaTableReader
+
+        return {
+            f: str(pv["p"])
+            for f, pv, _ in DeltaTableReader(path).snapshot().files
+        }
+    if fmt == "iceberg":
+        from aws_glue_data_lake_spark.icebergcompat import (
+            IcebergTableReader,
+        )
+
+        return {
+            f: str(pv["p"])
+            for f, pv in IcebergTableReader(path).snapshot().files
+        }
+    from aws_glue_data_lake_spark.lake import LakeTable
+
+    return {
+        e["path"]: str(e["partition"]["p"])
+        for e in LakeTable(path).snapshot().files
+    }
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "lake"])
+def test_update_only_rewrites_matched_files(spark, tmp_path, fmt):
     """Scale contract: files without a matching row are carried by
-    reference — the delta log's new version must REMOVE only the files
-    that held matches."""
-    from aws_glue_data_lake_spark.deltacompat import DeltaTableReader
-
-    path = str(tmp_path / "t")
-    t = open_table(path, "delta")
-    # two files via partition dirs: k<5 in p=0, rest in p=1
+    reference — the new version must REMOVE only the files that held
+    matches."""
+    path = str(tmp_path / fmt)
+    t = open_table(path, fmt)
+    # two files via partitions: k<5 in p=0, rest in p=1
     df = spark.createDataFrame(
         [(k, k * 10, k // 5) for k in range(10)], "k long, v long, p long"
     )
     t.create(df, partition_by=["p"])
-    files_before = {
-        f for f, _, _ in DeltaTableReader(path).snapshot().files
-    }
-    sql(spark, f"UPDATE delta.`{path}` SET v = 0 WHERE k = 7")  # p=1 only
-    files_after = {
-        f for f, _, _ in DeltaTableReader(path).snapshot().files
-    }
-    carried = files_before & files_after
-    rewritten = files_before - files_after
+    files_before = _files_by_partition(fmt, path)
+    sql(spark, f"UPDATE {fmt}.`{path}` SET v = 0 WHERE k = 7")  # p=1 only
+    files_after = _files_by_partition(fmt, path)
+    carried = files_before.keys() & files_after.keys()
+    rewritten = files_before.keys() - files_after.keys()
     assert rewritten, "the matched file must be rewritten"
     # every p=0 file carries by reference; only p=1 file(s) holding k=7
     # are rewritten
-    assert {f for f in files_before if "p=0" in f} <= carried
-    assert all("p=1" in f for f in rewritten)
+    assert {f for f, p in files_before.items() if p == "0"} <= carried
+    assert all(files_before[f] == "1" for f in rewritten)
+    assert sorted(
+        (r["k"], r["v"]) for r in t.read(spark).collect()
+    ) == [(k, 0 if k == 7 else k * 10) for k in range(10)]
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "lake"])
+def test_update_copies_rows_whose_predicate_is_null(spark, tmp_path, fmt):
+    """A row whose WHERE evaluates to NULL is neither updated nor
+    dropped: it is copied unchanged into the rewritten file, next to
+    the matched rows of the same file."""
+    path = str(tmp_path / fmt)
+    rows = [(1, 10), (2, None), (3, 30), (4, None)]
+    t = open_table(path, fmt).create(_mk(spark, rows).coalesce(1))
+    t.update_where(spark, "v > 15", {"v": "v + 1000"})
+    assert sorted(
+        ((r["k"], r["v"]) for r in t.read(spark).collect()),
+        key=lambda kv: kv[0],
+    ) == [(1, 10), (2, None), (3, 1030), (4, None)]
+
+
+def _count_jobs(spark, fn) -> int:
+    """Spark jobs that ``fn()`` issues, counted by job group (the
+    ``TestStagedBatchBounds`` idiom in test_cdc.py)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dml-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "dml job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: Spark jobs of one copy-on-write UPDATE on a two-file table, one file
+#: affected, no CDF: the affected-file collect and the rewrite's staging
+#: write. A second scan of the affected files, a re-evaluated predicate
+#: or a probe job added to the shared rewrite path goes over.
+UPDATE_JOBS = {"delta": 3, "iceberg": 4, "lake": 3}
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "lake"])
+def test_update_where_job_budget(spark, tmp_path, fmt):
+    path = str(tmp_path / fmt)
+    t = open_table(path, fmt).create(
+        spark.createDataFrame(
+            [(k, k * 10, k // 5) for k in range(10)],
+            "k long, v long, p long",
+        ),
+        partition_by=["p"],
+    )
+    counts = [
+        _count_jobs(
+            spark,
+            lambda: t.update_where(spark, f"k = {k}", {"v": "v + 1"}),
+        )
+        for k in (7, 8)
+    ]
+    assert sorted(
+        (r["k"], r["v"]) for r in t.read(spark).collect()
+    ) == [(k, k * 10 + (1 if k in (7, 8) else 0)) for k in range(10)]
+    # the first call warms the session; both must stay in budget
+    assert max(counts) <= UPDATE_JOBS[fmt], counts
+
+
+#: Spark jobs of one Iceberg ``overwrite_partition`` that replaces one
+#: of two partitions: the staging write of the incoming batch. The
+#: manifest rewrite it shares with UPDATE is driver-side and adds none.
+OVERWRITE_PARTITION_JOBS = 2
+
+
+def test_iceberg_overwrite_partition_job_budget(spark, tmp_path):
+    from aws_glue_data_lake_spark.icebergcompat import IcebergTableWriter
+
+    path = str(tmp_path / "t")
+    w = IcebergTableWriter(path)
+    w.create(
+        spark.createDataFrame(
+            [(k, k * 10, k // 5) for k in range(10)],
+            "k long, v long, p long",
+        ),
+        partition_by=["p"],
+    )
+    counts = [
+        _count_jobs(
+            spark,
+            lambda: w.overwrite_partition(
+                spark.createDataFrame(
+                    [(100 + i, i, 1)], "k long, v long, p long"
+                ),
+                p=1,
+            ),
+        )
+        for i in range(2)
+    ]
+    assert sorted(
+        r["k"] for r in open_table(path, "iceberg").read(spark).collect()
+    ) == [0, 1, 2, 3, 4, 101]
+    assert max(counts) <= OVERWRITE_PARTITION_JOBS, counts
 
 
 @pytest.mark.parametrize("fmt", ["delta", "iceberg", "lake"])

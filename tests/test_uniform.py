@@ -142,6 +142,40 @@ def test_uniform_delete_where_goes_copy_on_write(spark, tmp_path):
     assert d == i == []
 
 
+#: Spark jobs of one copy-on-write DELETE on a two-file UniForm table,
+#: one file affected, no CDF: the affected-file collect and the rewrite's
+#: staging write. The UPDATE and DELETE rewrite body is shared; a probe
+#: or a second scan added to it goes over.
+COW_DELETE_JOBS = 3
+
+
+def test_uniform_cow_delete_job_budget(spark, tmp_path):
+    import uuid
+
+    path = str(tmp_path / "t")
+    _uniform_table(path)
+    w = DeltaTableWriter(path)
+    w.append(spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
+    ).coalesce(1))
+    w.append(spark.createDataFrame([(9, "z")], "k long, v string"))
+    sc = spark.sparkContext
+    counts = []
+    for k in (1, 2):
+        group = f"cow-delete-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "copy-on-write delete job count")
+        try:
+            w.delete_where(spark, f"k = {k}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    d, i = _both_reads(spark, path)
+    assert d == i == [(3, "c"), (9, "z")]
+    # the first call warms the session; both must stay in budget
+    assert max(counts) <= COW_DELETE_JOBS, counts
+
+
 def test_uniform_partitioned_table_syncs_with_constant_columns(
     spark, tmp_path
 ):
