@@ -673,31 +673,65 @@ def _file_stats_json(path: str) -> str | None:
     )
 
 
+def _dv_file_path(descriptor: dict, table_root: str) -> str:
+    """The file a stored deletion vector's descriptor names (protocol
+    § Deletion Vector Descriptor Schema): 'u' = relative file named by a
+    Z85 uuid (optional random prefix), 'p' = absolute path."""
+    from aws_glue_data_lake_spark.roaring64 import z85_decode
+
+    ref = descriptor["pathOrInlineDv"]
+    if descriptor["storageType"] == "p":
+        return ref
+    prefix, encoded = ref[:-20], ref[-20:]
+    return os.path.join(
+        table_root, *([prefix] if prefix else []),
+        f"deletion_vector_{uuid.UUID(bytes=z85_decode(encoded))}.bin",
+    )
+
+
 def _resolve_dv_blob(descriptor: dict, table_root: str) -> bytes:
     """Fetch one deletion vector's RoaringBitmapArray bytes per its add
-    action's descriptor (protocol § Deletion Vector Descriptor Schema):
-    'u' = relative file named by a Z85 uuid (optional random prefix),
-    'p' = absolute path, 'i' = inline Z85 payload."""
+    action's descriptor: a stored file (:func:`_dv_file_path`) or, for
+    storageType 'i', an inline Z85 payload."""
     from aws_glue_data_lake_spark.roaring64 import read_dv_blob, z85_decode
 
     st = descriptor["storageType"]
-    ref = descriptor["pathOrInlineDv"]
     size = descriptor.get("sizeInBytes")
     if st == "i":
-        blob = z85_decode(ref)
+        blob = z85_decode(descriptor["pathOrInlineDv"])
         return blob[:size] if size is not None else blob
-    if st == "u":
-        prefix, encoded = ref[:-20], ref[-20:]
-        dv_uuid = uuid.UUID(bytes=z85_decode(encoded))
-        path = os.path.join(
-            table_root, *([prefix] if prefix else []),
-            f"deletion_vector_{dv_uuid}.bin",
-        )
-    elif st == "p":
-        path = ref
-    else:
+    if st not in ("u", "p"):
         raise DeltaProtocolError(f"unknown DV storageType {st!r}")
-    return read_dv_blob(path, descriptor["offset"], size)
+    return read_dv_blob(
+        _dv_file_path(descriptor, table_root), descriptor["offset"], size
+    )
+
+
+def _write_dvs(table_root: str, position_sets: list[list[int]]) -> list[dict]:
+    """Write one deletion-vector file under ``table_root`` holding one
+    roaring bitmap per position set; return each set's 'u' (relative,
+    uuid-named) descriptor, in order."""
+    from aws_glue_data_lake_spark.roaring64 import (
+        serialize_positions,
+        write_dv_file,
+        z85_encode,
+    )
+
+    dv_uuid = uuid.uuid4()
+    spans = write_dv_file(
+        os.path.join(table_root, f"deletion_vector_{dv_uuid}.bin"),
+        [serialize_positions(pos) for pos in position_sets],
+    )
+    return [
+        {
+            "storageType": "u",
+            "pathOrInlineDv": z85_encode(dv_uuid.bytes),
+            "offset": off,
+            "sizeInBytes": size,
+            "cardinality": len(set(pos)),
+        }
+        for pos, (off, size) in zip(position_sets, spans)
+    ]
 
 
 class DeltaTableReader:
@@ -1149,8 +1183,6 @@ class DeltaTableReader:
         resulting tombstone set is positions-only, so it broadcasts at
         any realistic churn (the same plan shape as lake.py's parquet
         DVs and the Iceberg position-delete path)."""
-        import pandas as pd
-
         dv_rows = [
             (p, json.dumps(dv)) for p, _pv, dv in snap.files if dv
         ]
@@ -1164,32 +1196,12 @@ class DeltaTableReader:
                 c for c in scan.columns if c not in ("__dv_fp", "__dv_pos")
             ]
         )
-
-        def expand(batches):
-            from aws_glue_data_lake_spark.roaring64 import (
-                deserialize_positions,
-            )
-
-            for pdf in batches:
-                for fp, dvj in zip(pdf["file_path"], pdf["dv"]):
-                    blob = _resolve_dv_blob(json.loads(dvj), root)
-                    yield pd.DataFrame(
-                        {
-                            "file_path": fp,
-                            "pos": deserialize_positions(blob),
-                        }
-                    )
-
-        # One slice per descriptor (cap 32): each row expands a whole DV
-        # blob in mapInPandas, so slices = concurrency, and a local_df
-        # avoids the 32-empty-pickle-task job a plain createDataFrame pays.
-        desc_df = local_df(
+        tomb = dml.expand_tombstones(
             spark,
             dv_rows,
             "file_path string, dv string",
-            slices=min(len(dv_rows), 32),
+            lambda row: _resolve_dv_blob(json.loads(row.dv), root),
         )
-        tomb = desc_df.mapInPandas(expand, "file_path string, pos long")
         return scan.join(
             F.broadcast(tomb),
             (F.col("__dv_fp") == F.col("file_path"))
@@ -2760,19 +2772,8 @@ class DeltaTableWriter:
             if dv:
                 dvc = dict(dv)
                 if dvc.get("storageType") == "u":
-                    from aws_glue_data_lake_spark.roaring64 import (
-                        z85_decode,
-                    )
-
-                    ref = dvc["pathOrInlineDv"]
-                    prefix, encoded = ref[:-20], ref[-20:]
-                    dv_uuid = uuid.UUID(bytes=z85_decode(encoded))
+                    dvc["pathOrInlineDv"] = _dv_file_path(dv, src_root)
                     dvc["storageType"] = "p"
-                    dvc["pathOrInlineDv"] = os.path.join(
-                        src_root,
-                        *([prefix] if prefix else []),
-                        f"deletion_vector_{dv_uuid}.bin",
-                    )
                 add["deletionVector"] = dvc
             base = rt.get(p)
             if base is not None:
@@ -4306,6 +4307,42 @@ class DeltaTableWriter:
                 if legacy_writer >= ver:
                     writer.update(feats)
         return sorted(reader), sorted(writer)
+
+    def _readd_action(
+        self, snap: DeltaSnapshot, p: str, pv: dict, dv: dict | None
+    ) -> dict:
+        """An ``add`` re-stating ``snap``'s file ``p`` under its raw key
+        with deletion vector ``dv``. It carries the file's stats (they
+        describe the PHYSICAL file; numRecords counts tombstoned rows
+        too) and its baseRowId/defaultRowCommitVersion (row ids are
+        stable across DV churn and restore; dropping them would renumber
+        surviving rows for every tracking-aware reader)."""
+        stats = (snap.stats or {}).get(p)
+        add = {
+            "path": self._raw_key(snap, p),
+            "partitionValues": pv,
+            "size": os.path.getsize(p),
+            "modificationTime": int(os.path.getmtime(p) * 1000),
+            "dataChange": True,
+            "deletionVector": dv,
+            "stats": json.dumps(stats) if stats else None,
+        }
+        rt = (snap.row_tracking or {}).get(os.path.abspath(p))
+        if rt is not None:
+            add["baseRowId"], add["defaultRowCommitVersion"] = rt
+        return {"add": add}
+
+    def _cdc_actions(
+        self, snap: DeltaSnapshot, changes: DataFrame
+    ) -> list[dict]:
+        """Stage ``changes`` (rows carrying ``_change_type``) as change
+        data files under ``snap``'s column mapping; return their ``cdc``
+        actions."""
+        to_phys, part_stage = self._physical_stage_ctx(snap)
+        return [
+            {"cdc": c}
+            for c in self._stage_files(to_phys(changes), part_stage, cdc=True)
+        ]
 
     @staticmethod
     def _physical_stage_ctx(
@@ -6195,27 +6232,13 @@ class DeltaTableWriter:
                     "TRUNCATE on a CDF table records row-level "
                     "deletes: pass the SparkSession (truncate(spark))"
                 )
-            changes = r.to_df(spark).withColumn(
-                "_change_type", F.lit("delete")
+            actions += self._cdc_actions(
+                snap,
+                r.to_df(spark).withColumn("_change_type", F.lit("delete")),
             )
-            to_physical, part_stage = self._physical_stage_ctx(snap)
-            actions += [
-                {"cdc": c}
-                for c in self._stage_files(
-                    to_physical(changes), part_stage, cdc=True
-                )
-            ]
-        now = int(time.time() * 1000)
-        actions += [
-            {
-                "remove": {
-                    "path": self._raw_key(snap, p),
-                    "deletionTimestamp": now,
-                    "dataChange": True,
-                }
-            }
-            for p, _, _ in snap.files
-        ]
+        actions += self._remove_actions(
+            snap, [p for p, _, _ in snap.files], True
+        )
         # whole-table semantics: a concurrent writer's rows must not
         # survive a truncate that serialized after it
         return self._commit_read_dependent(
@@ -6422,17 +6445,13 @@ class DeltaTableWriter:
         rewritten. The commit re-adds each touched file with a
         ``deletionVector`` descriptor (union'd with any prior DV) and
         upgrades the protocol to reader 3 / writer 7 with the
-        deletionVectors feature. Bitmap packing runs per-file on
-        executors (``applyInPandas``); the driver only handles the
-        compressed blobs — O(#touched files), never O(#rows).
-        ``optimize()`` later folds DVs away; ``vacuum()`` collects
-        orphaned DV bins."""
-        from aws_glue_data_lake_spark.roaring64 import (
-            deserialize_positions,
-            serialize_positions,
-            write_dv_file,
-            z85_encode,
-        )
+        deletionVectors feature. Matched positions are packed per file
+        on executors (:func:`dml.pack_positions`), but this process then
+        holds them and the touched files' prior DV positions: O(touched
+        files' tombstones). A DELETE that tombstones no new row commits
+        nothing. ``optimize()`` later folds DVs away; ``vacuum()``
+        collects orphaned DV bins."""
+        from aws_glue_data_lake_spark.roaring64 import deserialize_positions
 
         r = DeltaTableReader(self.path)
         snap = r.snapshot()
@@ -6450,54 +6469,40 @@ class DeltaTableWriter:
             # copy-on-write path, delta-spark's own behavior on
             # DV-disabled tables
             return self._rewrite_cow(spark, snap, cond, "DELETE")
-        # position scan WITHOUT DV subtraction: re-matching an
-        # already-deleted row is idempotent under the union below
-        packed = dml.pack_positions(
-            r._scan_with_pos(spark).where(cond), "__dv_fp", "__dv_pos"
-        )
-        if not packed:
-            return snap.version  # no-op: nothing matched
         by_path = {os.path.abspath(p): (p, pv, dv) for p, pv, dv in snap.files}
-        merged: list[tuple[str, dict, bytes, int]] = []
-        for fp, positions in packed:
-            p, pv, old_dv = by_path[os.path.abspath(fp)]
-            if old_dv:
-                old = deserialize_positions(_resolve_dv_blob(old_dv, self.path))
-                new = sorted(set(positions) | set(old))
-                if new == sorted(old):
-                    # every matched position was already tombstoned: the
-                    # DV would be byte-identical — rewriting it is pure
-                    # churn, so this file contributes nothing
-                    continue
-                positions = new
-            merged.append(
-                (p, pv, serialize_positions(positions), len(positions))
+
+        def prior(fp: str) -> list[int] | None:
+            dv = by_path[os.path.abspath(fp)][2]
+            return (
+                deserialize_positions(_resolve_dv_blob(dv, self.path))
+                if dv
+                else None
             )
-        if not merged:
-            return snap.version  # no-op: only already-deleted rows matched
+
+        # position scan WITHOUT DV subtraction: the fold drops matches
+        # that are already tombstoned
+        folded = dml.fold_positions(
+            dml.pack_positions(
+                r._scan_with_pos(spark).where(cond), "__dv_fp", "__dv_pos"
+            ),
+            prior,
+        )
+        if not folded:
+            return snap.version  # no-op: no row newly deleted
+        touched = [by_path[os.path.abspath(fp)][:2] for fp, _ in folded]
         cdc_actions: list[dict] = []
         if self._cdf_enabled(snap.configuration):
             # the plain scan applies the PRIOR deletion vectors, so this
             # captures exactly the newly-tombstoned rows (re-matching an
             # already-deleted row emits nothing — same idempotence as
             # the bitmap union)
-            deleted = (
+            cdc_actions = self._cdc_actions(
+                snap,
                 r.to_df(spark)
                 .where(cond)
-                .withColumn("_change_type", F.lit("delete"))
+                .withColumn("_change_type", F.lit("delete")),
             )
-            to_phys, part_stage = self._physical_stage_ctx(snap)
-            cdc_actions = [
-                {"cdc": c}
-                for c in self._stage_files(
-                    to_phys(deleted), part_stage, cdc=True
-                )
-            ]
-        dv_uuid = uuid.uuid4()
-        dv_name = f"deletion_vector_{dv_uuid}.bin"
-        spans = write_dv_file(
-            os.path.join(self.path, dv_name), [b for _, _, b, _ in merged]
-        )
+        dvs = _write_dvs(self.path, [pos for _, pos in folded])
         # With minReaderVersion 3 the feature LIST is authoritative: any
         # capability the table already relies on must be RE-DECLARED
         # alongside the deletionVectors upgrade — _feature_lists carries
@@ -6517,36 +6522,11 @@ class DeltaTableWriter:
                 }
             }
         ]
-        for (p, pv, _blob, card), (off, size) in zip(merged, spans):
-            actions += self._remove_actions(snap, [p], True)
-            prior_stats = (snap.stats or {}).get(p)
-            add = {
-                "path": self._raw_key(snap, p),
-                "partitionValues": pv,
-                "size": os.path.getsize(p),
-                "modificationTime": int(os.path.getmtime(p) * 1000),
-                "dataChange": True,
-                # stats describe the PHYSICAL file (numRecords
-                # counts tombstoned rows too) — carry them through
-                "stats": json.dumps(prior_stats)
-                if prior_stats
-                else None,
-                "deletionVector": {
-                    "storageType": "u",
-                    "pathOrInlineDv": z85_encode(dv_uuid.bytes),
-                    "offset": off,
-                    "sizeInBytes": size,
-                    "cardinality": card,
-                },
-            }
-            # rowTracking: a re-add of the SAME file must carry its
-            # baseRowId/defaultRowCommitVersion (spec: row ids are
-            # stable across DV churn; dropping them would renumber
-            # surviving rows for every tracking-aware reader)
-            rt = (snap.row_tracking or {}).get(os.path.abspath(p))
-            if rt is not None:
-                add["baseRowId"], add["defaultRowCommitVersion"] = rt
-            actions.append({"add": add})
+        actions += self._remove_actions(snap, [p for p, _ in touched], True)
+        actions += [
+            self._readd_action(snap, p, pv, dv)
+            for (p, pv), dv in zip(touched, dvs)
+        ]
         v = snap.version + 1
         return self._commit_read_dependent(
             v,
@@ -6585,16 +6565,7 @@ class DeltaTableWriter:
                     "longer exists (vacuumed?)"
                 )
             if dv and dv.get("storageType") == "u":
-                from aws_glue_data_lake_spark.roaring64 import z85_decode
-
-                dv_uuid = uuid.UUID(
-                    bytes=z85_decode(dv["pathOrInlineDv"][-20:])
-                )
-                prefix = dv["pathOrInlineDv"][:-20]
-                bin_path = os.path.join(
-                    self.path, *([prefix] if prefix else []),
-                    f"deletion_vector_{dv_uuid}.bin",
-                )
+                bin_path = _dv_file_path(dv, self.path)
                 if not os.path.exists(bin_path):
                     raise FileNotFoundError(
                         f"restore target v{version} references deletion "
@@ -6616,44 +6587,24 @@ class DeltaTableWriter:
             cur.raw_meta.get("schemaString")
         ):
             actions.append({"metaData": tgt.raw_meta})
-        for rel in sorted(set(cur_by_rel) - set(tgt_by_rel)):
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": int(time.time() * 1000),
-                        "dataChange": True,
-                    }
-                }
-            )
-        for rel in sorted(tgt_by_rel):
-            p, pv, dv = tgt_by_rel[rel]
-            if rel in cur_by_rel and cur_by_rel[rel][2] == dv:
-                continue  # identical live entry: nothing to re-state
-            if rel in cur_by_rel:
-                actions.append(
-                    {
-                        "remove": {
-                            "path": rel,
-                            "deletionTimestamp": int(time.time() * 1000),
-                            "dataChange": True,
-                        }
-                    }
-                )
-            stats = (tgt.stats or {}).get(p)
-            add = {
-                "path": rel,
-                "partitionValues": pv,
-                "size": os.path.getsize(p),
-                "modificationTime": 0,
-                "dataChange": True,
-                "deletionVector": dv,
-                "stats": json.dumps(stats) if stats else None,
-            }
-            rt = (tgt.row_tracking or {}).get(os.path.abspath(p))
-            if rt is not None:  # row ids are stable across restore
-                add["baseRowId"], add["defaultRowCommitVersion"] = rt
-            actions.append({"add": add})
+        # entries to (re-)add: every target entry not live now as it was
+        # then; a re-stated live entry is removed first (all removes
+        # precede the adds, so replay leaves the add live)
+        readd = [
+            rel
+            for rel, (_, _, dv) in sorted(tgt_by_rel.items())
+            if rel not in cur_by_rel or cur_by_rel[rel][2] != dv
+        ]
+        actions += self._remove_actions(
+            cur,
+            [
+                cur_by_rel[rel][0]
+                for rel in sorted(set(cur_by_rel) - set(tgt_by_rel))
+                + [rel for rel in readd if rel in cur_by_rel]
+            ],
+            True,
+        )
+        actions += [self._readd_action(tgt, *tgt_by_rel[rel]) for rel in readd]
         if self._cdf_enabled(cur.configuration):
             if spark is None:
                 raise ValueError(
@@ -6685,13 +6636,7 @@ class DeltaTableWriter:
                 )
             )
             if not changes.isEmpty():
-                to_phys, part_stage = self._physical_stage_ctx(tgt)
-                actions = actions + [
-                    {"cdc": c}
-                    for c in self._stage_files(
-                        to_phys(changes), part_stage, cdc=True
-                    )
-                ]
+                actions += self._cdc_actions(tgt, changes)
         v = cur.version + 1
         # RESTORE is whole-table semantics: the defaults (read set =
         # everything, any dataChange add conflicts) keep it strict
@@ -6762,21 +6707,15 @@ class DeltaTableWriter:
         if retained[-1] != tip:
             retained.append(tip)
         live: set[str] = set()
-        live_dv_uuids: set[str] = set()
+        live_dvs: set[str] = set()
         for v in retained:
             snap = r.snapshot(v)
             live |= {os.path.abspath(p) for p, _, _ in snap.files}
-            for _, _, dv in snap.files:
-                if dv and dv.get("storageType") == "u":
-                    from aws_glue_data_lake_spark.roaring64 import z85_decode
-
-                    live_dv_uuids.add(
-                        str(
-                            uuid.UUID(
-                                bytes=z85_decode(dv["pathOrInlineDv"][-20:])
-                            )
-                        )
-                    )
+            live_dvs |= {
+                os.path.abspath(_dv_file_path(dv, self.path))
+                for _, _, dv in snap.files
+                if dv and dv.get("storageType") != "i"
+            }
         # CDF files live outside every snapshot's file set: retained for
         # the log's lifetime (delta-spark ages them out on a retention
         # window instead). Only cdc files NO retained commit references
@@ -6813,9 +6752,7 @@ class DeltaTableWriter:
             os.path.join(self.path, "**", "deletion_vector_*.bin"),
             recursive=True,
         ):
-            name = os.path.basename(p)
-            dv_uuid = name[len("deletion_vector_") : -len(".bin")]
-            if dv_uuid not in live_dv_uuids:
+            if os.path.abspath(p) not in live_dvs:
                 if not dry_run:
                     os.remove(p)
                 removed.append(os.path.abspath(p))
@@ -6851,48 +6788,20 @@ def export_lake_snapshot(lake_table, dest_path: str, version: int | None = None)
     os.makedirs(dest_path, exist_ok=True)
 
     # -- convert lake DV sidecars (parquet tombstones) to roaring blobs --
-    dv_entries = [f for f in snap.files if f.get("dv")]
-    dv_by_file: dict[str, dict] = {}
-    if dv_entries:
-        import pyarrow.parquet as pq
-
-        from aws_glue_data_lake_spark.roaring64 import (
-            serialize_positions,
-            write_dv_file,
-            z85_encode,
+    tombstones = lake_table._tombstones(snap.files)
+    dv_files = [
+        (f["path"], tombstones[name])
+        for f in snap.files
+        if (name := os.path.basename(f["path"])) in tombstones
+    ]
+    dv_by_file = {}
+    if dv_files:
+        dv_by_file = dict(
+            zip(
+                [p for p, _ in dv_files],
+                _write_dvs(dest_path, [pos for _, pos in dv_files]),
+            )
         )
-
-        positions_by_name: dict[str, list[int]] = {}
-        for sidecar in sorted({f["dv"]["path"] for f in dv_entries}):
-            tbl = pq.read_table(
-                lake_table._abs(sidecar), columns=["file_name", "row_index"]
-            )
-            for name, pos in zip(
-                tbl.column("file_name").to_pylist(),
-                tbl.column("row_index").to_pylist(),
-            ):
-                positions_by_name.setdefault(name, []).append(pos)
-        blobs, ordered = [], []
-        for f in dv_entries:
-            name = os.path.basename(f["path"])
-            pos = positions_by_name.get(name)
-            if pos:
-                blobs.append(serialize_positions(pos))
-                ordered.append((f["path"], len(set(pos))))
-        if blobs:
-            dv_uuid = uuid.uuid4()
-            spans = write_dv_file(
-                os.path.join(dest_path, f"deletion_vector_{dv_uuid}.bin"),
-                blobs,
-            )
-            for (rel, card), (off, size) in zip(ordered, spans):
-                dv_by_file[rel] = {
-                    "storageType": "u",
-                    "pathOrInlineDv": z85_encode(dv_uuid.bytes),
-                    "offset": off,
-                    "sizeInBytes": size,
-                    "cardinality": card,
-                }
 
     adds = []
     for f in snap.files:

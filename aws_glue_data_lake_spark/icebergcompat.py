@@ -1124,44 +1124,27 @@ class IcebergTableReader:
 
     @staticmethod
     def _expand_dv_tombstones(spark: SparkSession, dvs: list) -> DataFrame:
-        """format-version 3 deletion vectors -> a (file_path, pos)
-        tombstone DataFrame: descriptors (driver-side metadata) ship to
-        executors, each puffin blob is fetched + CRC-checked + expanded
-        per referenced file — distributed, positions-only, broadcastable;
-        the same plan shape as the Delta DV path
-        (deltacompat._apply_dvs) and the v2 position deletes."""
+        """format-version 3 deletion vectors (``snap.dv_deletes``
+        tuples) -> a (file_path, pos) tombstone DataFrame, each puffin
+        blob fetched, CRC-checked and expanded on an executor
+        (:func:`dml.expand_tombstones`)."""
 
-        def expand_dvs(batches):
-            import pandas as _pd
+        def fetch(row):
+            import pandas as pd
 
-            from aws_glue_data_lake_spark.roaring64 import (
-                deserialize_positions,
-                read_dv_blob,
+            from aws_glue_data_lake_spark.roaring64 import read_dv_blob
+
+            size = None if pd.isna(row.size) else int(row.size)
+            return read_dv_blob(
+                row.puffin, int(row.off), size, size_semantics="total"
             )
 
-            for pdf in batches:
-                for puf, ref, off, size in zip(
-                    pdf["puffin"], pdf["ref"], pdf["off"], pdf["size"]
-                ):
-                    blob = read_dv_blob(
-                        puf, int(off),
-                        int(size) if not _pd.isna(size) else None,
-                        size_semantics="total",
-                    )
-                    yield _pd.DataFrame(
-                        {
-                            "file_path": ref,
-                            "pos": deserialize_positions(blob),
-                        }
-                    )
-
-        desc = local_df(
+        return dml.expand_tombstones(
             spark,
-            [(puf, ref, off, size) for puf, ref, off, size in dvs],
-            "puffin string, ref string, off long, size long",
-            slices=min(len(dvs), 32),
+            [(ref, puf, off, size) for puf, ref, off, size in dvs],
+            "ref string, puffin string, off long, size long",
+            fetch,
         )
-        return desc.mapInPandas(expand_dvs, "file_path string, pos long")
 
     def history(self) -> list[dict]:
         """The snapshot log, newest first: snapshot id, commit
@@ -4461,86 +4444,53 @@ class IcebergTableWriter:
         (reference icberg/iceberg_tables.py:143-146 with
         write.delete.mode=merge-on-read): matching row positions land in
         a (file_path, pos) parquet tombstone file committed through a
-        content=1 (deletes) manifest; no data file is rewritten. One
-        delete costs O(matched rows); readers pay a broadcast anti-join
-        until a compaction folds the tombstones away."""
-        import shutil as _shutil
-
-        from pyspark.sql import functions as F
-
+        content=1 (deletes) manifest; no data file is rewritten. The
+        positions come from :func:`dml.pack_positions` over a scan that
+        drops tombstoned rows, so a DELETE matching no live row commits
+        nothing. Readers pay a broadcast anti-join until a compaction
+        folds the tombstones away."""
         prev = self._load_prev()
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
         schema_json = self._current_schema(prev)
-        spec_ = self._default_spec(prev)
-        spec_id = spec_["spec-id"]
-        spec_fields = spec_["fields"]
         pcols, _ = self._spec_partition_ctx(
             _iceberg_type_to_spark(
                 {"type": "struct", "fields": schema_json["fields"]}
             ),
             schema_json,
-            spec_fields,
+            self._default_spec(prev)["fields"],
         )
-        if prev.get("format-version", 2) >= 3:
-            # v3 tables delete via puffin DELETION VECTORS, not loose
-            # position-delete files (spec: v3 writers MUST use DVs)
-            return self._delete_where_v3(
-                spark, condition, prev, schema_json, pcols
-            )
         reader = IcebergTableReader(self.path)
         snap = reader.snapshot()
         if not snap.files:
             return prev["current-snapshot-id"]
-        # route the matched-row scan through to_df like _delete_where_v3
-        # does: it resolves columns by per-file field ID (a foreign
-        # table's pre-rename physical names would otherwise read as NULL
-        # and the predicate would silently match nothing), takes the
-        # positional reader for ORC/Avro data files, and excludes rows
-        # already tombstoned (no redundant double-tombstoning)
-        fresh = (
-            reader.to_df(spark, _with_meta=True)
-            .where(dml.as_column(condition))
-            .select(
-                F.col("__del_fp").alias("file_path"),
-                F.col("__del_pos").cast("long").alias("pos"),
-            )
+        # to_df resolves columns by per-file field ID (a foreign table's
+        # pre-rename physical names would otherwise read as NULL and the
+        # predicate would silently match nothing), takes the positional
+        # reader for ORC/Avro data files, and drops rows already
+        # tombstoned, so no position is tombstoned twice
+        packed = dml.pack_positions(
+            reader.to_df(spark, _with_meta=True).where(
+                dml.as_column(condition)
+            ),
+            "__del_fp",
+            "__del_pos",
         )
-        if fresh.isEmpty():
+        if not packed:
             return prev["current-snapshot-id"]
+        if prev.get("format-version", 2) >= 3:
+            # v3 tables delete via puffin DELETION VECTORS, not loose
+            # position-delete files (spec: v3 writers MUST use DVs)
+            return self._delete_where_v3(
+                packed, prev, snap, schema_json, pcols
+            )
+        # v2 allows several position-delete files per data file, so the
+        # new positions need no fold with the prior ones
         os.makedirs(self._data_dir, exist_ok=True)
-        stage = os.path.join(self.path, f"_stage_{uuid.uuid4().hex}")
-        # spec ordering: position deletes sort by (file_path, pos) so
-        # readers can merge-scan them
-        fresh.coalesce(1).sortWithinPartitions(
-            "file_path", "pos"
-        ).write.mode("overwrite").parquet(stage)
-        (src,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-        import pyarrow.parquet as pq
-
-        n_del = pq.ParquetFile(src).metadata.num_rows
         dst = os.path.join(
             self._data_dir, f"{uuid.uuid4().hex}-deletes.parquet"
         )
-        _shutil.move(src, dst)
-        _shutil.rmtree(stage, ignore_errors=True)
-        def attempt(pv: dict) -> int:
-            sid, seq = self._next_ids(pv)
-            null_pv = {n: None for n, _ in pcols}
-            entry = self._entry(
-                dst, null_pv, n_del, os.path.getsize(dst),
-                _STATUS_ADDED, sid, seq, content=1,
-            )
-            manifests = self._manifest_list_of(pv) + [
-                self._write_manifest(
-                    [entry], pcols, sid, seq, schema_json, content=1
-                )
-            ]
-            ml_path = self._write_manifest_list(pv, sid, manifests)
-            self._commit_metadata(
-                pv, schema_json, pcols, sid, seq, ml_path, "delete"
-            )
-            return sid
+        n_del = dml.write_position_file(dst, packed, "file_path", "pos")
 
         def winner_check(base: dict, new: dict) -> str | None:
             # the predicate scanned base's data files; a winner that
@@ -4560,23 +4510,55 @@ class IcebergTableWriter:
                 )
             return None
 
+        return self._commit_delete_file(
+            prev, schema_json, pcols, dst, n_del,
+            "delete_where (DELETE)", winner_check,
+        )
+
+    def _commit_delete_file(
+        self, prev: dict, schema_json, pcols, dst: str, n_rows: int,
+        operation: str, winner_check, equality_ids=None, branch="main",
+    ) -> int:
+        """Commit the delete file ``dst`` (``n_rows`` rows) as one new
+        delete manifest: position deletes, or equality deletes on
+        ``equality_ids``. A lost commit race retries against the new tip
+        when ``winner_check`` accepts the winners."""
+
+        def attempt(pv: dict) -> int:
+            sid, seq = self._next_ids(pv)
+            entry = self._entry(
+                dst, {n: None for n, _ in pcols}, n_rows,
+                os.path.getsize(dst), _STATUS_ADDED, sid, seq,
+                content=1 if equality_ids is None else 2,
+                equality_ids=equality_ids,
+            )
+            manifests = self._manifest_list_of(pv, branch) + [
+                self._write_manifest(
+                    [entry], pcols, sid, seq, schema_json, content=1
+                )
+            ]
+            ml_path = self._write_manifest_list(pv, sid, manifests)
+            self._commit_metadata(
+                pv, schema_json, pcols, sid, seq, ml_path, "delete",
+                branch=branch,
+            )
+            return sid
+
         return self._retry_read_dependent(
-            prev, "delete_where (DELETE)", attempt, winner_check
+            prev, operation, attempt, winner_check
         )
 
     def _delete_where_v3(
-        self, spark: SparkSession, condition, prev: dict, schema_json, pcols
+        self, packed, prev: dict, snap, schema_json, pcols
     ) -> int:
-        """format-version 3 row-level DELETE: matching positions land in
-        puffin DELETION VECTORS — one ``deletion-vector-v1`` blob per
-        referenced data file, located by the manifest entry's
-        content_offset / content_size_in_bytes (TOTAL stored blob per
-        the Puffin footer contract). An existing DV for a touched file
-        is UNIONED in and its manifest entry tombstoned, keeping the
-        spec's at-most-one-DV-per-file invariant. Write cost is
-        O(#matched rows) like the v2 position-delete path: bitmap
-        packing runs per-file on executors, the driver handles only the
-        compressed blobs."""
+        """format-version 3 row-level DELETE: the matched positions
+        ``packed`` land in puffin DELETION VECTORS — one
+        ``deletion-vector-v1`` blob per referenced data file, located by
+        the manifest entry's content_offset / content_size_in_bytes
+        (TOTAL stored blob per the Puffin footer contract). An existing
+        DV for a touched file is folded in and its manifest entry
+        tombstoned, keeping the spec's at-most-one-DV-per-file
+        invariant."""
         from aws_glue_data_lake_spark.roaring64 import (
             deserialize_positions,
             read_dv_blob,
@@ -4585,46 +4567,35 @@ class IcebergTableWriter:
         )
 
         reader = IcebergTableReader(self.path)
-        snap = reader.snapshot()
-        if not snap.files:
-            return prev["current-snapshot-id"]
-        packed = dml.pack_positions(
-            reader.to_df(spark, _with_meta=True).where(
-                dml.as_column(condition)
-            ),
-            "__del_fp",
-            "__del_pos",
-        )
-        if not packed:
-            return prev["current-snapshot-id"]
-
-        def _norm(pth: str) -> str:
-            pth = pth.removeprefix("file://")
-            return (
-                pth
-                if os.path.isabs(pth)
-                else os.path.abspath(os.path.join(self.path, pth))
-            )
-
         existing = {
             os.path.abspath(ref): (puf, off, size)
             for puf, ref, off, size in (snap.dv_deletes or [])
         }
-        sid, seq = self._next_ids(prev)
-        dvs: list[tuple[str, bytes, int]] = []
-        replaced: set[str] = set()
-        for fp, positions in packed:
-            fp = os.path.abspath(fp)
-            if fp in existing:
-                puf, off, size = existing[fp]
-                old = deserialize_positions(
-                    read_dv_blob(puf, off, size, size_semantics="total")
+
+        def prior(fp: str) -> list[int] | None:
+            old = existing.get(os.path.abspath(fp))
+            return (
+                deserialize_positions(
+                    read_dv_blob(*old, size_semantics="total")
                 )
-                positions = sorted(set(positions) | set(old))
-                replaced.add(fp)
-            dvs.append(
-                (fp, bytes(serialize_positions(positions)), len(positions))
+                if old
+                else None
             )
+
+        folded = dml.fold_positions(packed, prior)
+        if not folded:
+            return prev["current-snapshot-id"]
+
+        sid, seq = self._next_ids(prev)
+        dvs = [
+            (
+                os.path.abspath(fp),
+                bytes(serialize_positions(positions)),
+                len(positions),
+            )
+            for fp, positions in folded
+        ]
+        replaced = {fp for fp, _, _ in dvs} & set(existing)
         os.makedirs(self._data_dir, exist_ok=True)
         puf_path = os.path.join(
             self._data_dir, f"{uuid.uuid4().hex}-dv.puffin"
@@ -4653,43 +4624,43 @@ class IcebergTableWriter:
             }
             for (ref, _blob, card), (off, total) in zip(dvs, spans)
         ]
+        # a delete manifest holding a superseded DV is rewritten with
+        # that entry DELETED and the others EXISTING
         new_manifests = []
         for mf in self._manifest_list_of(prev):
-            if mf.get("content", 0) != 1 or not replaced:
-                new_manifests.append(mf)
-                continue
-            _, entries, _ = read_container(mf["manifest_path"])
-            hit = any(
-                e["status"] != _STATUS_DELETED
-                and e["data_file"].get("referenced_data_file") is not None
-                and _norm(e["data_file"]["referenced_data_file"]) in replaced
-                for e in entries
-            )
-            if not hit:
+            live = []
+            if mf.get("content", 0) == 1 and replaced:
+                live = [
+                    e
+                    for e in read_container(mf["manifest_path"])[1]
+                    if e["status"] != _STATUS_DELETED
+                ]
+            # resolved like the reader resolves snap.dv_deletes' refs
+            gone = [
+                (ref := e["data_file"].get("referenced_data_file"))
+                is not None
+                and os.path.abspath(reader._abs(ref)) in replaced
+                for e in live
+            ]
+            if not any(gone):
                 new_manifests.append(mf)
                 continue
             rewritten = []
-            for e in entries:
-                if e["status"] == _STATUS_DELETED:
-                    continue
-                e = dict(e)
-                ref0 = e["data_file"].get("referenced_data_file")
-                superseded = ref0 is not None and _norm(ref0) in replaced
-                e["status"] = (
-                    _STATUS_DELETED if superseded else _STATUS_EXISTING
+            for e, superseded in zip(live, gone):
+                e = dict(
+                    e,
+                    status=_STATUS_DELETED if superseded else _STATUS_EXISTING,
                 )
-                if e.get("sequence_number") is None:
-                    e["sequence_number"] = mf.get("sequence_number", 0)
-                if e.get("file_sequence_number") is None:
-                    e["file_sequence_number"] = mf.get("sequence_number", 0)
+                for k in ("sequence_number", "file_sequence_number"):
+                    if e.get(k) is None:
+                        e[k] = mf.get("sequence_number", 0)
                 rewritten.append(e)
-            if rewritten:
-                new_manifests.append(
-                    self._write_manifest(
-                        rewritten, pcols, sid, seq, schema_json,
-                        content=1, v3_dv=True,
-                    )
+            new_manifests.append(
+                self._write_manifest(
+                    rewritten, pcols, sid, seq, schema_json,
+                    content=1, v3_dv=True,
                 )
+            )
         new_manifests.append(
             self._write_manifest(
                 dv_entries, pcols, sid, seq, schema_json,
@@ -5155,15 +5126,12 @@ class IcebergTableWriter:
         if prev is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
         schema_json = self._current_schema(prev)
-        spec_ = self._default_spec(prev)
-        spec_id = spec_["spec-id"]
-        spec_fields = spec_["fields"]
         pcols, _ = self._spec_partition_ctx(
             _iceberg_type_to_spark(
                 {"type": "struct", "fields": schema_json["fields"]}
             ),
             schema_json,
-            spec_fields,
+            self._default_spec(prev)["fields"],
         )
         names = list(equality_cols or keys_df.columns)
         if keys_df.isEmpty():
@@ -5171,31 +5139,13 @@ class IcebergTableWriter:
         dst, n_del, eq_ids = self._stage_eq_delete_file(
             keys_df, names, schema_json
         )
-
-        def attempt(pv: dict) -> int:
-            # like MERGE: an equality delete reads no table data (it
-            # targets every earlier sequence number), so it rebases over
-            # ANY winner — the exact Flink-sink CDC commit-retry shape
-            sid, seq = self._next_ids(pv)
-            null_pv = {n: None for n, _ in pcols}
-            entry = self._entry(
-                dst, null_pv, n_del, os.path.getsize(dst),
-                _STATUS_ADDED, sid, seq, content=2, equality_ids=eq_ids,
-            )
-            manifests = self._manifest_list_of(pv, branch or "main") + [
-                self._write_manifest(
-                    [entry], pcols, sid, seq, schema_json, content=1
-                )
-            ]
-            ml_path = self._write_manifest_list(pv, sid, manifests)
-            self._commit_metadata(
-                pv, schema_json, pcols, sid, seq, ml_path, "delete",
-                branch=branch or "main",
-            )
-            return sid
-
-        return self._retry_read_dependent(
-            prev, "equality_delete (DELETE)", attempt, lambda b, n: None
+        # like MERGE: an equality delete reads no table data (it targets
+        # every earlier sequence number), so it rebases over ANY winner
+        # — the exact Flink-sink CDC commit-retry shape
+        return self._commit_delete_file(
+            prev, schema_json, pcols, dst, n_del,
+            "equality_delete (DELETE)", lambda b, n: None,
+            equality_ids=eq_ids, branch=branch or "main",
         )
 
     def compact(

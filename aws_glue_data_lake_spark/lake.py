@@ -1259,18 +1259,44 @@ class LakeTable:
             constraints=dict(target.constraints or {}),
         )
 
+    def _tombstones(self, entries: list[dict]) -> dict[str, list[int]]:
+        """Deleted row positions of ``entries``, keyed by data file
+        basename, each read from its entry's own sidecar with pyarrow."""
+        by_sidecar: dict[str, list[str]] = {}
+        for e in entries:
+            if e.get("dv"):
+                by_sidecar.setdefault(e["dv"]["path"], []).append(
+                    os.path.basename(e["path"])
+                )
+        out: dict[str, list[int]] = {}
+        for rel, names in by_sidecar.items():
+            t = pq.read_table(
+                self._abs(rel),
+                columns=["file_name", "row_index"],
+                filters=[("file_name", "in", names)],
+            )
+            for name, pos in zip(
+                t.column("file_name").to_pylist(),
+                t.column("row_index").to_pylist(),
+            ):
+                out.setdefault(name, []).append(pos)
+        return out
+
     def delete_where(self, spark: SparkSession, condition: str) -> Snapshot:
         """MERGE-ON-READ row-level delete via deletion vectors: instead of
         rewriting data files (the copy-on-write path ``upsert``/``merge``
         take), record the deleted row POSITIONS in a sidecar parquet and
-        leave every data file untouched. One delete commit costs O(matched
-        rows) writes regardless of file sizes — the Delta/Iceberg v2
-        "deletion vectors" trade: cheap deletes, a small anti-join tax on
-        every read until ``compact`` folds the DVs away.
+        leave every data file untouched — the Delta/Iceberg v2 "deletion
+        vectors" trade: cheap deletes, a small anti-join tax on every
+        read until ``compact`` folds the DVs away.
 
-        The DV sidecar holds (file_name, row_index) with any PRIOR DV rows
-        for the affected files folded in, so each file entry references
-        exactly one DV file and superseded sidecars become vacuumable.
+        Matched positions come from :func:`dml.pack_positions` over a raw
+        ``_metadata`` scan and are folded into each touched entry's own
+        sidecar rows (:func:`dml.fold_positions`). One new sidecar holds
+        (file_name, row_index) for the files whose set grew, and only
+        their entries point to it; other entries keep their sidecar, and
+        one no entry references is vacuumable. Cost: O(touched files'
+        tombstones); a delete that tombstones no new row commits nothing.
         Readers apply DVs inside ``_read_files`` — the single scan
         chokepoint — so time travel, upserts, and compaction all see the
         deleted rows gone. Note ``stat_max`` stays manifest-level (an
@@ -1282,55 +1308,41 @@ class LakeTable:
         from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
+        from aws_glue_data_lake_spark.operators import dml
+
         snap = self.snapshot()
-        st = StructType.fromDDL(snap.schema)
-        reader = spark.read.schema(st)
+        if not snap.files:
+            return snap
+        reader = spark.read.schema(StructType.fromDDL(snap.schema))
         if snap.partition_by:
             reader = reader.option("basePath", self._data)
-        scan = reader.parquet(*[self._abs(r) for r in snap.file_names]).select(
-            F.col("_metadata.file_name").alias("file_name"),
-            F.col("_metadata.row_index").alias("row_index"),
-            F.expr(condition).alias("__del"),
+        matched = (
+            reader.parquet(*[self._abs(r) for r in snap.file_names])
+            .select(
+                F.col("_metadata.file_name").alias("file_name"),
+                F.col("_metadata.row_index").alias("row_index"),
+                dml.as_column(condition).alias("__del"),
+            )
+            .where("__del")
         )
-        fresh = scan.where("__del").select("file_name", "row_index")
-        prior_rels = snap.dv_paths
-        if prior_rels:
-            prior = spark.read.parquet(
-                *[self._abs(r) for r in prior_rels]
-            ).select("file_name", "row_index")
-            fresh = fresh.union(prior).distinct()
-        # Driver-side dict bounded by |files with deleted rows| — the same
-        # order as the manifest metadata this commit must write anyway
-        # (each such file's entry gains a dv reference), so this collect
-        # scales with the DELETE's blast radius, never the table. The
-        # delta-manifest log (see _commit) keeps the commit itself
-        # O(changed entries) too.
-        per_file = {
-            r["file_name"]: r["n"]
-            for r in fresh.groupBy("file_name")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        if not per_file:
-            return snap  # nothing matched and no prior DVs: no-op
-        dv_dir = os.path.join(self.path, "_dv")
-        os.makedirs(dv_dir, exist_ok=True)
-        stage = os.path.join(self.path, f"_stage_{uuid.uuid4().hex}")
-        fresh.coalesce(1).write.mode("overwrite").parquet(stage)
-        (src,) = glob.glob(os.path.join(stage, "part-*.parquet"))
+        packed = dml.pack_positions(matched, "file_name", "row_index")
+        by_name = {os.path.basename(e["path"]): e for e in snap.files}
+        prior = self._tombstones([by_name[fp] for fp, _ in packed])
+        folded = dml.fold_positions(packed, prior.get)
+        if not folded:
+            return snap  # no row newly deleted: commit nothing
+        os.makedirs(os.path.join(self.path, "_dv"), exist_ok=True)
         rel = os.path.join("_dv", f"{uuid.uuid4().hex}.parquet")
-        shutil.move(src, self._abs(rel))
-        shutil.rmtree(stage, ignore_errors=True)
-        files = []
-        for e in snap.files:
-            e = dict(e)
-            name = os.path.basename(e["path"])
-            if name in per_file:
-                e["dv"] = {"path": rel, "rows": int(per_file[name])}
-            # (a file with a prior DV always lands in per_file — its old
-            # rows are folded into the new sidecar — so no entry ever
-            # silently loses its DV here)
-            files.append(e)
+        dml.write_position_file(
+            self._abs(rel), folded, "file_name", "row_index"
+        )
+        rows = {fp: len(pos) for fp, pos in folded}
+        files = [
+            dict(e, dv={"path": rel, "rows": rows[name]})
+            if (name := os.path.basename(e["path"])) in rows
+            else e
+            for e in snap.files
+        ]
         return self._commit(
             files, snap.schema, "delete-dv", snap,
             partition_by=snap.partition_by,

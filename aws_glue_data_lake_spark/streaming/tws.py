@@ -246,7 +246,8 @@ class SeededUserStatsProcessor(StatefulProcessor):
 
     def handleInitialState(self, key, initialState, timerValues) -> None:
         # one batch row per key: (n, vsum_us) already in micro-units
-        self._agg.update((int(initialState["n"]), int(initialState["vsum_us"])))
+        row = initialState.iloc[0]
+        self._agg.update((int(row["n"]), int(row["vsum_us"])))
 
     def handleInputRows(self, key, rows, timerValues):
         import pandas as pd

@@ -486,6 +486,35 @@ def test_position_deletes_merge_on_read(spark, tmp_path):
         r.snapshot()
 
 
+def test_position_delete_file_sorted_and_counted(spark, tmp_path):
+    """The v2 position-delete file a DELETE writes is sorted by
+    (file_path, pos), as the spec requires, and its manifest entry's
+    record_count equals the file's row count."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "ice")
+    w = IcebergTableWriter(path)
+    r = w.create(spark.range(200).selectExpr("id AS k").repartition(4))
+    assert len(r.snapshot().files) == 4
+    w.delete_where(spark, "k % 3 = 0")
+    (dst,) = r.snapshot().delete_files
+    rows = pq.read_table(dst).to_pydict()
+    pairs = list(zip(rows["file_path"], rows["pos"]))
+    assert len(pairs) == len([k for k in range(200) if k % 3 == 0])
+    assert pairs == sorted(pairs)
+    assert len({fp for fp, _ in pairs}) == len(r.snapshot().files)
+    (entry,) = [
+        e
+        for mf in w._manifest_list_of(r._metadata())
+        if mf.get("content", 0) == 1
+        for e in read_container(mf["manifest_path"])[1]
+    ]
+    assert entry["data_file"]["record_count"] == len(pairs)
+    assert sorted(x.k for x in r.to_df(spark).collect()) == [
+        k for k in range(200) if k % 3 != 0
+    ]
+
+
 def test_compact_and_expire_snapshots_lifecycle(spark, tmp_path):
     """compact() folds position-delete tombstones into rewritten data
     files (content identical, delete_files empty); expire_snapshots()

@@ -626,9 +626,9 @@ def test_deletion_vectors_merge_on_read(spark, tmp_path):
     assert t.read(spark, version=s2.version).count() == 200 - len(
         [i for i in range(200) if i % 9 == 4]
     )
-    # delete with no matches is a no-op commit-wise
-    assert t.delete_where(spark, "id = -1").version == s3.version + 1
-    # (the prior DVs still exist, so a fold still commits; state unchanged)
+    # a delete that tombstones no new row commits nothing, although
+    # prior DVs exist; state unchanged
+    assert t.delete_where(spark, "id = -1").version == s3.version
     assert t.read(spark).count() == len(live)
 
     s_c = t.compact(spark)
@@ -637,6 +637,62 @@ def test_deletion_vectors_merge_on_read(spark, tmp_path):
 
     removed = t.vacuum(keep_versions=1)
     assert any(r.startswith("_dv/") for r in removed)  # (e)
+    assert sorted(r["id"] for r in t.read(spark).collect()) == live
+
+
+def test_deletion_vector_sidecar_per_touched_entry(spark, tmp_path):
+    """A delete that touches one of four files writes a sidecar holding
+    only that file's (file_name, row_index) rows and re-points only
+    that file's entry; the other entries keep their sidecar. After
+    ``compact``, ``vacuum`` still collects the superseded sidecars."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from aws_glue_data_lake_spark.lake import LakeTable
+
+    t = LakeTable(str(tmp_path / "dv_entry"))
+    t.create(spark.range(200).selectExpr("id", "id % 9 AS grp").repartition(4))
+    t.delete_where(spark, "grp = 4")
+    first = {e["path"]: e["dv"]["path"] for e in t.snapshot().files}
+    assert len(first) == 4 and len(set(first.values())) == 1
+
+    # the file holding id 0: one matched row, one touched entry
+    (name,) = [
+        r["f"]
+        for r in spark.read.parquet(
+            *[t._abs(p) for p in t.snapshot().file_names]
+        )
+        .where("id = 0")
+        .select(F.col("_metadata.file_name").alias("f"))
+        .collect()
+    ]
+    t.delete_where(spark, "id = 0")
+    after = {e["path"]: e["dv"]["path"] for e in t.snapshot().files}
+    touched = [p for p in after if os.path.basename(p) == name]
+    assert len(touched) == 1
+    assert after[touched[0]] != first[touched[0]]
+    assert {p: d for p, d in after.items() if p not in touched} == {
+        p: d for p, d in first.items() if p not in touched
+    }
+    side = pq.read_table(t._abs(after[touched[0]])).to_pydict()
+    assert set(side["file_name"]) == {name}
+    old = pq.read_table(t._abs(first[touched[0]])).to_pydict()
+    prior = {
+        i for f, i in zip(old["file_name"], old["row_index"]) if f == name
+    }
+    assert set(side["row_index"]) > prior
+    assert len(side["row_index"]) == len(prior) + 1
+    live = [i for i in range(200) if i % 9 != 4 and i != 0]
+    assert sorted(r["id"] for r in t.read(spark).collect()) == live
+
+    t.compact(spark)
+    assert t.snapshot().dv_paths == []
+    removed = t.vacuum(keep_versions=1)
+    assert {d for d in removed if d.startswith("_dv/")} == {
+        first[touched[0]], after[touched[0]]
+    }
     assert sorted(r["id"] for r in t.read(spark).collect()) == live
 
 

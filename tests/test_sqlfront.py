@@ -350,6 +350,70 @@ def test_iceberg_overwrite_partition_job_budget(spark, tmp_path):
     assert max(counts) <= OVERWRITE_PARTITION_JOBS, counts
 
 
+#: Spark jobs of each merge-on-read DELETE in the sequence
+#: ``k % 9 = 4``, ``k < 20``, ``k = -1``, ``k % 9 = 4`` on a 200-row,
+#: 4-file table. Every path takes its matched positions from one
+#: ``dml.pack_positions`` collect over the format's position scan; Delta
+#: with CDF stages the newly deleted rows as change rows, and Iceberg's
+#: scan anti-joins the prior tombstones. The last two calls tombstone
+#: no new row and commit nothing.
+DELETE_JOBS = {
+    "lake": [2, 2, 2, 2],
+    "delta": [2, 2, 2, 2],
+    "delta_cdf": [3, 4, 2, 2],
+    "iceberg_v2": [2, 5, 5, 5],
+    "iceberg_v3": [2, 3, 3, 3],
+}
+
+
+@pytest.mark.parametrize("variant", sorted(DELETE_JOBS))
+def test_delete_where_job_budget_and_noop_commits(spark, tmp_path, variant):
+    """DELETE on every merge-on-read path: the applied calls delete
+    the matched rows, a DELETE that matches nothing and a repeat of an
+    applied DELETE commit nothing (same version returned, same history,
+    same rows), and no call runs more Spark jobs than its budget."""
+    from aws_glue_data_lake_spark.deltacompat import DeltaTableWriter
+    from aws_glue_data_lake_spark.icebergcompat import IcebergTableWriter
+    from aws_glue_data_lake_spark.lake import LakeTable
+
+    path = str(tmp_path / variant)
+    df = spark.range(200).selectExpr("id AS k", "id % 9 AS grp")
+    df = df.repartition(4)
+    fmt = variant.split("_")[0]
+    if fmt == "lake":
+        w = LakeTable(path)
+        w.create(df)
+    elif fmt == "delta":
+        w = DeltaTableWriter(path)
+        w.create(df)
+        if variant == "delta_cdf":
+            w.set_change_data_feed()
+    else:
+        w = IcebergTableWriter(path)
+        w.create(df, format_version=3 if variant == "iceberg_v3" else 2)
+    t = open_table(path, fmt)
+    versions, counts = [], []
+
+    def delete(cond):
+        out = w.delete_where(spark, cond)
+        versions.append(getattr(out, "version", out))  # lake: a Snapshot
+
+    for cond in ("k % 9 = 4", "k < 20"):
+        counts.append(_count_jobs(spark, lambda: delete(cond)))
+    live = sorted(k for k in range(200) if k % 9 != 4 and k >= 20)
+    assert sorted(r["k"] for r in t.read(spark).collect()) == live
+    history = t.history()
+    for cond in ("k = -1", "k % 9 = 4"):
+        counts.append(_count_jobs(spark, lambda: delete(cond)))
+    assert versions[0] != versions[1]
+    assert versions[2:] == [versions[1]] * 2, versions
+    assert t.history() == history
+    assert sorted(r["k"] for r in t.read(spark).collect()) == live
+    assert all(
+        n <= cap for n, cap in zip(counts, DELETE_JOBS[variant])
+    ), counts
+
+
 @pytest.mark.parametrize("fmt", ["delta", "iceberg", "lake"])
 def test_insert_statement_select_and_values(spark, tmp_path, fmt):
     """INSERT INTO through the front door: a SELECT body (columns by
